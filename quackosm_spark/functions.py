@@ -11,9 +11,7 @@ from __future__ import annotations
 from pathlib import Path
 from typing import Any, Optional, Sequence, Union
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from quackosm_spark import cache
 from quackosm_spark.filters.tags import merge_osm_tags_filter
@@ -235,52 +233,28 @@ def convert_pbf_to_parquet(
         ignore_metadata_tags=ignore_metadata_tags,
         osm_way_polygon_features_config=osm_way_polygon_features_config,
     )
+    # stats once, on the unsorted features: the extent keys the sort and the
+    # types + bbox go to the footer
+    from quackosm_spark.sinks.geoparquet import collect_geo_stats
+
+    geometry_types, bbox = collect_geo_stats(features)
     if sort_result:
-        features = spatial_sort(features, algorithm=sort_algorithm)
-    writer_kwargs = dict(
+        features = spatial_sort(features, extent=bbox, algorithm=sort_algorithm)
+    # WKT outputs carry the same geo metadata as WKB ones (reference
+    # tests/base/test_pbf_file_reader.py:95-98)
+    write_geoparquet(
+        features,
+        result_file_path,
+        geometry_types=geometry_types,
+        bbox=bbox,
         compression=compression,
         compression_level=compression_level,
         row_group_size=row_group_size,
         parquet_version=parquet_version,
         max_records_per_file=max_records_per_file,
         bbox_column=bbox_column,
+        encoding="WKT" if save_as_wkt else "WKB",
     )
-    if save_as_wkt:
-        # geo stats (types + bbox) must come from the WKB column; compute
-        # them BEFORE re-encoding, then stamp the footer with encoding=WKT —
-        # the reference's WKT outputs carry the same geo metadata
-        # (tests/base/test_pbf_file_reader.py:95-98)
-        from pyspark.sql.types import StringType
-
-        from quackosm_spark.sinks.geoparquet import collect_geo_stats
-
-        geometry_types, geo_bbox = collect_geo_stats(features)
-        if bbox_column and "bbox" not in features.columns:
-            # the covering column also decodes WKB — attach it pre-re-encode
-            from quackosm_spark.plans.output import geometry_bbox_udf
-
-            features = features.withColumn("bbox", geometry_bbox_udf("geometry"))
-
-        @F.pandas_udf(StringType())
-        def _to_wkt(geometry: pd.Series) -> pd.Series:
-            from quackosm_spark.geometry import model, wkb
-
-            return pd.Series(
-                [model.to_wkt(wkb.loads(bytes(b))) if b is not None else None
-                 for b in geometry]
-            )
-
-        features = features.withColumn("geometry", _to_wkt("geometry"))
-        write_geoparquet(
-            features,
-            result_file_path,
-            geometry_types=geometry_types,
-            bbox=geo_bbox,
-            encoding="WKT",
-            **writer_kwargs,
-        )
-        return result_file_path
-    write_geoparquet(features, result_file_path, **writer_kwargs)
     return result_file_path
 
 

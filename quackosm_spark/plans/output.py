@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from typing import Optional
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -208,28 +207,6 @@ def dedup_features(features: DataFrame) -> DataFrame:
     return features.dropDuplicates([FEATURES_INDEX])
 
 
-@F.pandas_udf(LongType())
-def _hilbert_key_udf(geometry: pd.Series, extent_minx: pd.Series, extent_miny: pd.Series,
-                     extent_maxx: pd.Series, extent_maxy: pd.Series) -> pd.Series:
-    from quackosm_spark.geometry import model
-    from quackosm_spark.geometry.ops import hilbert_index
-
-    n = len(geometry)
-    xs = np.empty(n)
-    ys = np.empty(n)
-    for i, blob in enumerate(geometry):
-        b = model.bounds(wkb_codec.loads(bytes(blob)))
-        xs[i] = (b[0] + b[2]) / 2.0
-        ys[i] = (b[1] + b[3]) / 2.0
-    ext = (
-        float(extent_minx.iloc[0]),
-        float(extent_miny.iloc[0]),
-        float(extent_maxx.iloc[0]),
-        float(extent_maxy.iloc[0]),
-    )
-    return pd.Series(hilbert_index(xs, ys, ext))
-
-
 def spatial_sort(
     features: DataFrame,
     extent: tuple[float, float, float, float] | None = None,
@@ -238,11 +215,15 @@ def spatial_sort(
 ) -> DataFrame:
     """O3 spatial sort (reference dispatch pbf_file_reader.py:4021-4043).
 
-    ``algorithm="hilbert"`` (default): curve key of the geometry centroid →
+    Both algorithms key on the geometry centroid, the midpoint of the
+    ``geometry_bbox_udf`` bounds (one WKB decode per row).
+
+    ``algorithm="hilbert"`` (default): curve key of the centroid →
     ``repartitionByRange`` + ``sortWithinPartitions`` so readers get
     row-group pruning by locality. ``extent`` defaults to the dataset bbox
-    (computed with one agg pass — A7). ``num_partitions`` pins the output
-    file count (AQE otherwise coalesces small outputs to one).
+    from ``collect_geo_stats`` (one aggregate job); pass it to start no job
+    here. ``num_partitions`` pins the output file count (AQE otherwise
+    coalesces small outputs to one).
 
     ``algorithm="str"``: Sort-Tile-Recursive slab packing — range-partition
     on centroid x (vertical slabs), order by centroid y within each slab.
@@ -250,48 +231,38 @@ def spatial_sort(
     expressed in Spark primitives: the range partitioner computes the x
     slab boundaries from a sample, each output file is one slab.
     """
-    if algorithm == "str":
-        keyed = features.withColumn("__bb", geometry_bbox_udf("geometry")).withColumn(
-            "__cx", (F.col("__bb.xmin") + F.col("__bb.xmax")) / 2.0
-        ).withColumn("__cy", (F.col("__bb.ymin") + F.col("__bb.ymax")) / 2.0)
-        ranged = (
-            keyed.repartitionByRange(num_partitions, "__cx")
-            if num_partitions
-            else keyed.repartitionByRange("__cx")
-        )
-        return ranged.sortWithinPartitions("__cy").drop("__bb", "__cx", "__cy")
-    if algorithm != "hilbert":
+    if algorithm not in ("hilbert", "str"):
         raise ValueError(f"Unknown sort algorithm: {algorithm!r} (str|hilbert)")
-    if extent is None:
-        # ONE WKB decode per row (geometry_bbox_udf), not 4 per-coordinate
-        # UDFs each re-decoding every blob — VERDICT r01 hot-path fix
-        row = (
-            features.select(geometry_bbox_udf("geometry").alias("__bb"))
-            .agg(
-                F.min("__bb.xmin").alias("minx"),
-                F.min("__bb.ymin").alias("miny"),
-                F.max("__bb.xmax").alias("maxx"),
-                F.max("__bb.ymax").alias("maxy"),
-            )
-            .collect()[0]
+    keyed = features.withColumn("__bb", geometry_bbox_udf("geometry")).withColumn(
+        "__cx", (F.col("__bb.xmin") + F.col("__bb.xmax")) / 2.0
+    ).withColumn("__cy", (F.col("__bb.ymin") + F.col("__bb.ymax")) / 2.0)
+    if algorithm == "str":
+        range_key, sort_key = "__cx", "__cy"
+    else:
+        if extent is None:
+            from quackosm_spark.sinks.geoparquet import collect_geo_stats
+
+            extent = collect_geo_stats(features)[1]
+
+        @F.pandas_udf(LongType())
+        def _hilbert_key(cx: pd.Series, cy: pd.Series) -> pd.Series:
+            from quackosm_spark.geometry.ops import hilbert_index
+
+            return pd.Series(hilbert_index(cx.to_numpy(), cy.to_numpy(), extent))
+
+        # only the key crosses the shuffle
+        keyed = keyed.withColumn("__hilbert", _hilbert_key("__cx", "__cy")).drop(
+            "__bb", "__cx", "__cy"
         )
-        extent = (row["minx"], row["miny"], row["maxx"], row["maxy"])
-    keyed = features.withColumn(
-        "__hilbert",
-        _hilbert_key_udf(
-            F.col("geometry"),
-            F.lit(extent[0]),
-            F.lit(extent[1]),
-            F.lit(extent[2]),
-            F.lit(extent[3]),
-        ),
-    )
+        range_key = sort_key = "__hilbert"
     ranged = (
-        keyed.repartitionByRange(num_partitions, "__hilbert")
+        keyed.repartitionByRange(num_partitions, range_key)
         if num_partitions
-        else keyed.repartitionByRange("__hilbert")
+        else keyed.repartitionByRange(range_key)
     )
-    return ranged.sortWithinPartitions("__hilbert").drop("__hilbert")
+    return ranged.sortWithinPartitions(sort_key).drop(
+        "__bb", "__cx", "__cy", "__hilbert"
+    )
 
 
 from pyspark.sql.types import DoubleType, StructField, StructType
@@ -303,9 +274,9 @@ _BBOX_STRUCT = StructType(
 
 @F.pandas_udf(_BBOX_STRUCT)
 def geometry_bbox_udf(geometry: pd.Series) -> pd.DataFrame:
-    """Per-feature bounds struct for the GeoParquet 1.1 bbox covering
-    column — ONE WKB decode per row (the per-coordinate UDFs above decode
-    once per coordinate; use this when all four bounds are needed)."""
+    """Per-feature bounds struct — ONE WKB decode per row. Feeds the
+    GeoParquet 1.1 bbox covering column, the footer extent
+    (``collect_geo_stats``) and the sort centroid (``spatial_sort``)."""
     from quackosm_spark.geometry import model
 
     rows = [

@@ -11,6 +11,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """About half of physical memory (``MemTotal`` in ``/proc/meminfo``),
+    leaving the rest to Python workers and the OS; ``8g`` where
+    ``/proc/meminfo`` is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except OSError:
+        pass
+    return "8g"
+
+
 def get_spark(
     app_name: str = "quackosm-spark",
     master: str | None = None,
@@ -93,7 +107,10 @@ def get_spark(
         # for such keys become AMBIGUOUS_REFERENCE. DuckDB (the reference
         # engine) is case-sensitive here too.
         .config("spark.sql.caseSensitive", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # Long-lived sessions (the 300-test suite, notebooks, streaming
         # drivers) accumulate broadcast blocks + shuffle files that the
         # ContextCleaner only frees on driver GC; the default periodic-GC

@@ -4,12 +4,13 @@ Reference: quackosm/_geoparquet_metadata.py:7-30 (metadata construction),
 pbf_file_reader.py:4124-4197 (bbox/geometry-type aggregation before write).
 
 Spark's parquet writer cannot attach file-level key-value metadata, so the
-write is two-phase: (1) distributed ``df.write.parquet`` (zstd, bounded file
+write is two-phase: (1) distributed ``df.write.parquet`` (bounded file
 sizes — this is the 100 TB path, all heavy lifting stays on executors), then
 (2) a footer-rewrite pass stamping the ``geo`` entry into each part file.
-The rewrite streams row groups through pyarrow without decoding values and is
-embarrassingly parallel over part files (thread pool here; a ``foreach`` over
-files on a real cluster).
+The rewrite reads each part whole into a pyarrow table and writes it back,
+so it is the one place that sets the physical layout: codec and level, rows
+per row group, parquet format version. It is embarrassingly parallel over
+part files (thread pool here; a ``foreach`` over files on a real cluster).
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from quackosm_spark.constants import GEOMETRY_COLUMN
 
@@ -60,17 +62,6 @@ CRS_LONLAT = {
     "id": {"authority": "OGC", "code": "CRS84"},
 }
 
-_WKB_TYPE_NAMES = {
-    "Point": "Point",
-    "LineString": "LineString",
-    "Polygon": "Polygon",
-    "MultiPoint": "MultiPoint",
-    "MultiLineString": "MultiLineString",
-    "MultiPolygon": "MultiPolygon",
-    "GeometryCollection": "GeometryCollection",
-}
-
-
 def build_geo_metadata(
     geometry_types: list[str],
     bbox: tuple[float, float, float, float],
@@ -101,28 +92,14 @@ def build_geo_metadata(
 
 
 def collect_geo_stats(features: DataFrame) -> tuple[list[str], tuple[float, float, float, float]]:
-    """A7 extent agg + A8 distinct geometry types, one job each on the
-    geometry column (WKB headers only for the type sniff)."""
+    """A7 extent + A8 distinct geometry types in ONE aggregate job: one WKB
+    decode per row feeds both the bounds struct and the type sniff. No rows
+    give null bounds, which map to ``([], (0.0, 0.0, 0.0, 0.0))``."""
     from quackosm_spark.plans.output import geometry_bbox_udf
 
-    if features.isEmpty():
-        return [], (0.0, 0.0, 0.0, 0.0)
-
-    from pyspark.sql.types import StringType
-
-    @F.pandas_udf(StringType())
-    def _geom_type(geometry: pd.Series) -> pd.Series:
-        from quackosm_spark.geometry.wkb import geometry_type
-
-        return pd.Series(
-            [geometry_type(bytes(b)) if b is not None else None for b in geometry]
-        )
-
-    # one WKB decode per row: bbox struct + type sniff in a single pass
-    # (was 4 per-coordinate UDFs, each decoding every blob)
     stats = (
         features.select(
-            _geom_type(GEOMETRY_COLUMN).alias("__t"),
+            _geometry_type_udf(GEOMETRY_COLUMN).alias("__t"),
             geometry_bbox_udf(GEOMETRY_COLUMN).alias("__bb"),
         )
         .agg(
@@ -134,20 +111,43 @@ def collect_geo_stats(features: DataFrame) -> tuple[list[str], tuple[float, floa
         )
         .collect()[0]
     )
-    types = sorted(_WKB_TYPE_NAMES.get(t, t) for t in stats["types"])
-    return types, (stats["minx"], stats["miny"], stats["maxx"], stats["maxy"])
+    if stats["minx"] is None:
+        return [], (0.0, 0.0, 0.0, 0.0)
+    return sorted(stats["types"]), (stats["minx"], stats["miny"], stats["maxx"], stats["maxy"])
 
 
-def _stamp_footer(path: Path, geo_json: str, compression: str = "zstd") -> None:
+@F.pandas_udf(StringType())
+def _geometry_type_udf(geometry: pd.Series) -> pd.Series:
+    from quackosm_spark.geometry.wkb import geometry_type
+
+    return pd.Series(
+        [geometry_type(bytes(b)) if b is not None else None for b in geometry]
+    )
+
+
+@F.pandas_udf(StringType())
+def _wkb_to_wkt_udf(geometry: pd.Series) -> pd.Series:
+    from quackosm_spark.geometry import model, wkb
+
+    return pd.Series(
+        [model.to_wkt(wkb.loads(bytes(b))) if b is not None else None for b in geometry]
+    )
+
+
+_PARQUET_VERSIONS = {
+    None: {},
+    "v1": {"version": "1.0"},
+    "v2": {"version": "2.6", "data_page_version": "2.0"},
+}
+
+
+def _stamp_footer(path: Path, geo_json: str, layout: dict) -> None:
+    """Rewrite one part with the ``geo`` footer entry; ``layout`` holds the
+    ``pq.write_table`` options (codec, level, row group rows, version)."""
     table = pq.read_table(path)
     meta = dict(table.schema.metadata or {})
     meta[b"geo"] = geo_json.encode()
-    pq.write_table(
-        table.replace_schema_metadata(meta),
-        path,
-        compression=compression,
-        row_group_size=100_000,
-    )
+    pq.write_table(table.replace_schema_metadata(meta), path, **layout)
     # the rewrite invalidates Hadoop's local-FS checksum sidecar; drop it so
     # subsequent Spark reads don't fail with ChecksumException
     crc = path.parent / f".{path.name}.crc"
@@ -169,13 +169,17 @@ def write_geoparquet(
 ) -> Path:
     """Distributed parquet write + geo footer stamping. Returns the directory.
 
+    ``features`` carries WKB geometry. ``encoding="WKT"`` takes the footer
+    stats and the ``bbox`` covering column from the WKB, then re-encodes
+    the geometry column as WKT text.
+
     ``compression``/``max_records_per_file`` mirror the reference's writer
     tuning surface (COMPRESSION zstd, FILE_SIZE_BYTES/ROW_GROUP_SIZE_BYTES,
-    pbf_file_reader.py:2686-2699) in Spark terms. ``compression_level``
-    maps to the parquet-mr codec level option, ``row_group_size`` to
-    ``parquet.block.size`` (bytes — Spark's writer sizes row groups by
-    bytes where DuckDB counts rows), ``parquet_version`` ("v1"/"v2") to
-    ``parquet.writer.version``.
+    pbf_file_reader.py:2686-2699); ``max_records_per_file`` bounds Spark's
+    part files. The footer rewrite sets the rest of the layout:
+    ``compression_level`` is the codec level, ``row_group_size`` counts
+    ROWS per row group (default 100 000), ``parquet_version`` "v1" writes
+    format 1.0 and "v2" format 2.6 with v2 data pages.
 
     ``bbox_column=True`` writes the GeoParquet 1.1 ``bbox`` covering column
     (per-row bounds struct + ``covering`` metadata). Combined with the
@@ -184,6 +188,12 @@ def write_geoparquet(
     row groups that can't intersect a query window; that's the scan-prune
     story for spatial queries over 100 TB of output."""
     path = Path(path)
+    layout = dict(
+        compression=compression,
+        compression_level=compression_level,
+        row_group_size=row_group_size or 100_000,
+        **_PARQUET_VERSIONS[parquet_version],
+    )
     if bbox_column and "bbox" not in features.columns:
         from quackosm_spark.plans.output import geometry_bbox_udf
 
@@ -192,16 +202,9 @@ def write_geoparquet(
         computed_types, computed_bbox = collect_geo_stats(features)
         geometry_types = geometry_types or computed_types
         bbox = bbox or computed_bbox
+    if encoding == "WKT":
+        features = features.withColumn(GEOMETRY_COLUMN, _wkb_to_wkt_udf(GEOMETRY_COLUMN))
     writer = features.write.mode("overwrite").option("compression", compression)
-    if compression_level is not None:
-        writer = writer.option(
-            f"parquet.compression.codec.{compression}.level", str(compression_level)
-        )
-    if row_group_size is not None:
-        writer = writer.option("parquet.block.size", str(row_group_size))
-    if parquet_version is not None:
-        versions = {"v1": "PARQUET_1_0", "v2": "PARQUET_2_0"}
-        writer = writer.option("parquet.writer.version", versions[parquet_version])
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.parquet(str(path))
@@ -214,7 +217,7 @@ def write_geoparquet(
     )
     parts = sorted(path.glob("*.parquet"))
     with ThreadPoolExecutor(max_workers=8) as pool:
-        list(pool.map(lambda p: _stamp_footer(p, geo_json, compression), parts))
+        list(pool.map(lambda p: _stamp_footer(p, geo_json, layout), parts))
     return path
 
 

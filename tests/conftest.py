@@ -12,15 +12,12 @@ from quackosm_spark.sources.pbf import ELEMENTS_SCHEMA  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    import os
-
     from quackosm_spark.session import get_spark
 
-    # One JVM serves the whole 300-test suite: give it headroom (the 8g
-    # default is sized for a single conversion, and a heap death here
-    # cascades into ConnectionRefused for every remaining test) and skip
-    # the UI server.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    # One JVM serves the whole suite. Its heap is get_spark's default, about
+    # half of physical memory: a larger heap lets the kernel OOM-kill the
+    # JVM, and every remaining test then fails with ConnectionRefused.
+    # SPARK_GRAFT_DRIVER_MEM still overrides it. The UI server is skipped.
     spark = get_spark(
         app_name="quackosm-spark-tests",
         shuffle_partitions=4,

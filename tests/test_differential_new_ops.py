@@ -749,8 +749,9 @@ def test_pq_reranked_hybrid_l2_handles_mixed_dims(spark):
 
 
 def test_argmin_code_matches_struct_sort(spark):
-    """_argmin_code (r12 least+CASE WHEN scalar argmin) vs the former
-    sort_array(array(struct(d, i)))[0].i on every distance-vector class:
+    """_argmin_code (array_position(arr, array_min(arr)) over one distance
+    array) vs the former sort_array(array(struct(d, i)))[0].i on every
+    distance-vector class:
     distinct, tied, all-NULL (malformed vector), all-NaN — ties and
     degenerate rows must resolve to the LOWEST index exactly as the
     struct sort did."""
@@ -799,16 +800,12 @@ def _hof_cosine(a, b):
 
 
 def test_cosine_static_dim_matches_hof(spark):
-    """_cosine_static_dim / _cosine_vs_literal (r12 unrolled hybrids) vs
-    the HOF cosine on every malformed-vector class: NULL vector, wrong
-    dims (short/long), NULL element, NaN element, zero norm, empty —
-    values must be identical (including NULL-ness) because the fast path
+    """_cosine_static_dim (r12 unrolled hybrid) vs the HOF cosine on every
+    malformed-vector class: NULL vector, wrong dims (short/long), NULL
+    element, NaN element, zero norm, empty — values must be identical (including NULL-ness) because the fast path
     replicates the fold order and everything else falls back to the HOF
     expression itself."""
-    from quackosm_spark.operators.similarity import (
-        _cosine_static_dim,
-        _cosine_vs_literal,
-    )
+    from quackosm_spark.operators.similarity import _cosine_static_dim
 
     vecs = [
         (0, [1.0, 2.0, 3.0, 4.0], [4.0, 3.0, 2.0, 1.0]),
@@ -824,22 +821,12 @@ def test_cosine_static_dim_matches_hof(spark):
     df = spark.createDataFrame(
         vecs, "id: long, a: array<double>, b: array<double>"
     )
-    cent = [1.0, 2.0, 3.0, 4.0]
-    cases = [
-        (
-            _cosine_static_dim(F.col("a"), F.col("b"), 4),
-            _hof_cosine(F.col("a"), F.col("b")),
-        ),
-        (
-            _cosine_vs_literal(F.col("a"), cent),
-            _hof_cosine(F.col("a"), F.array(*[F.lit(x) for x in cent])),
-        ),
-    ]
-    for i, (new, old) in enumerate(cases):
-        for r in df.select("id", new.alias("n"), old.alias("o")).collect():
-            if r.n is None or r.o is None:
-                assert r.n is None and r.o is None, (i, r)
-            elif math.isnan(r.n) or math.isnan(r.o):
-                assert math.isnan(r.n) and math.isnan(r.o), (i, r)
-            else:
-                assert r.n == r.o, (i, r)
+    new = _cosine_static_dim(F.col("a"), F.col("b"), 4)
+    old = _hof_cosine(F.col("a"), F.col("b"))
+    for r in df.select("id", new.alias("n"), old.alias("o")).collect():
+        if r.n is None or r.o is None:
+            assert r.n is None and r.o is None, r
+        elif math.isnan(r.n) or math.isnan(r.o):
+            assert math.isnan(r.n) and math.isnan(r.o), r
+        else:
+            assert r.n == r.o, r

@@ -28,12 +28,16 @@ def test_operator_index_shape():
     rows = build_rows()
     names = [r[0] for r in rows]
     # the index covers the full public surface (>=166 as of r9) and every
-    # row carries a resolvable module:line anchor
+    # row carries a module anchor naming an existing file (no line number,
+    # so code moving inside a module does not stale the index)
     assert len(rows) >= 166
     assert len(set(names)) == len(names)
+    pkg = REPO / "quackosm_spark"
     for name, where, qs, doc in rows:
-        mod, line = where.rsplit(":", 1)
-        assert int(line) > 0 and mod.endswith(".py")
+        assert ":" not in where and where.endswith(".py")
+        assert (pkg / "operators" / where).exists() or (
+            where == "streaming.py" and (pkg / "streaming").is_dir()
+        ), where
     # contract-query attribution sanity: known pinned operators
     attributed = {r[0]: r[2] for r in rows}
     assert "q134_incremental_neardup" in attributed["minhash_index"]

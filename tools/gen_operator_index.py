@@ -1,11 +1,13 @@
 """Generate the README operator index (VERDICT r8 "Next round" #8).
 
 Walks every public function in quackosm_spark.operators.* and
-quackosm_spark.streaming, resolves module:line via inspect, finds the
+quackosm_spark.streaming, records its defining module, finds the
 contract queries that exercise each operator by scanning
 __spark_entry__.py's source for the name, and rewrites the table
 between the OPERATOR-INDEX markers in README.md. A test regenerates
 the table and asserts README matches, so the index cannot go stale.
+The anchor is the module file only (no line number), so moving code
+inside a module does not make the index stale.
 
 Usage: python tools/gen_operator_index.py [--check]
   --check: exit 1 if README.md is out of date (no write).
@@ -75,8 +77,7 @@ def build_rows() -> list[tuple[str, str, str, str]]:
                 or obj.__module__ != mod.__name__
             ):
                 continue
-            line = inspect.getsourcelines(obj)[1]
-            where = f"{label.replace('operators.', '')}.py:{line}"
+            where = f"{label.replace('operators.', '')}.py"
             word = re.compile(rf"\b{re.escape(name)}\b")
             qs = sorted(
                 q for q, body in chunks.items() if word.search(body)
