@@ -1,29 +1,37 @@
-"""GeoParquet 1.1.0 sink (S6): Spark parquet write + 'geo' footer metadata.
+"""GeoParquet 1.1.0 sink (S6): one distributed write of parts that carry
+the 'geo' footer metadata.
 
 Reference: quackosm/_geoparquet_metadata.py:7-30 (metadata construction),
 pbf_file_reader.py:4124-4197 (bbox/geometry-type aggregation before write).
 
-Spark's parquet writer cannot attach file-level key-value metadata, so the
-write is two-phase: (1) distributed ``df.write.parquet`` (bounded file
-sizes — this is the 100 TB path, all heavy lifting stays on executors), then
-(2) a footer-rewrite pass stamping the ``geo`` entry into each part file.
-The rewrite reads each part whole into a pyarrow table and writes it back,
-so it is the one place that sets the physical layout: codec and level, rows
-per row group, parquet format version. It is embarrassingly parallel over
-part files (thread pool here; a ``foreach`` over files on a real cluster).
+The geometry stats are known before the write starts, so the footer is too.
+Each Spark task writes its own Arrow batches with pyarrow (``mapInArrow``):
+the parts carry the ``geo`` entry from the first byte, and the task is the
+one place that sets the physical layout (codec and level, rows per row
+group and per file, parquet format version). Tasks write under a staging
+directory next to the output, on a filesystem the driver also sees; the
+driver publishes the parts successful tasks report only after the job
+succeeds, so a failed write leaves the previous output untouched.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
-from concurrent.futures import ThreadPoolExecutor
+import os
+import shutil
+import uuid
 from pathlib import Path
 from typing import Literal
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType
 
 from quackosm_spark.constants import GEOMETRY_COLUMN
@@ -141,17 +149,43 @@ _PARQUET_VERSIONS = {
 }
 
 
-def _stamp_footer(path: Path, geo_json: str, layout: dict) -> None:
-    """Rewrite one part with the ``geo`` footer entry; ``layout`` holds the
-    ``pq.write_table`` options (codec, level, row group rows, version)."""
-    table = pq.read_table(path)
-    meta = dict(table.schema.metadata or {})
-    meta[b"geo"] = geo_json.encode()
-    pq.write_table(table.replace_schema_metadata(meta), path, **layout)
-    # the rewrite invalidates Hadoop's local-FS checksum sidecar; drop it so
-    # subsequent Spark reads don't fail with ChecksumException
-    crc = path.parent / f".{path.name}.crc"
-    crc.unlink(missing_ok=True)
+def _part_writer(attempts: Path, geo: bytes, layout: dict, rows_per_file: int,
+                 rows_per_group: int):
+    """The ``mapInArrow`` body: write one task's batches, in order, as parts
+    of at most ``rows_per_file`` rows (0: no cap) in row groups of
+    ``rows_per_group`` rows, under the task attempt's own directory in
+    ``attempts``; yield the part paths. A task with no rows writes nothing."""
+
+    def write(batches):
+        first = next(batches, None)
+        if first is None:
+            return
+        ctx = TaskContext.get()
+        attempt = attempts / str(ctx.taskAttemptId())
+        attempt.mkdir()
+        prefix = f"part-{ctx.partitionId():05d}-c"
+        ds.write_dataset(
+            itertools.chain([first], batches),
+            attempt,
+            schema=first.schema.with_metadata({b"geo": geo}),
+            format="parquet",
+            file_options=ds.ParquetFileFormat().make_write_options(**layout),
+            basename_template=prefix + "{i}.parquet",
+            max_rows_per_file=rows_per_file,
+            min_rows_per_group=rows_per_group,
+            max_rows_per_group=rows_per_group,
+            use_threads=False,
+            create_dir=False,
+        )
+        # zero-pad the file counter so that the parts sort in row order
+        parts = []
+        for i in range(len(os.listdir(attempt))):
+            part = attempt / f"{prefix}{i:03d}.parquet"
+            (attempt / f"{prefix}{i}.parquet").rename(part)
+            parts.append(str(part))
+        yield pa.RecordBatch.from_pydict({"part": parts})
+
+    return write
 
 
 def write_geoparquet(
@@ -167,7 +201,7 @@ def write_geoparquet(
     bbox_column: bool = False,
     encoding: str = "WKB",
 ) -> Path:
-    """Distributed parquet write + geo footer stamping. Returns the directory.
+    """One distributed write of GeoParquet parts. Returns the directory.
 
     ``features`` carries WKB geometry. ``encoding="WKT"`` takes the footer
     stats and the ``bbox`` covering column from the WKB, then re-encodes
@@ -175,11 +209,19 @@ def write_geoparquet(
 
     ``compression``/``max_records_per_file`` mirror the reference's writer
     tuning surface (COMPRESSION zstd, FILE_SIZE_BYTES/ROW_GROUP_SIZE_BYTES,
-    pbf_file_reader.py:2686-2699); ``max_records_per_file`` bounds Spark's
-    part files. The footer rewrite sets the rest of the layout:
-    ``compression_level`` is the codec level, ``row_group_size`` counts
-    ROWS per row group (default 100 000), ``parquet_version`` "v1" writes
-    format 1.0 and "v2" format 2.6 with v2 data pages.
+    pbf_file_reader.py:2686-2699). Each task writes its rows, in order,
+    with the ``geo`` footer and this layout: ``compression`` at
+    ``compression_level``, row groups of ``row_group_size`` ROWS (default
+    100 000), parts of at most ``max_records_per_file`` rows (split like
+    Spark's ``maxRecordsPerFile``), ``parquet_version`` "v1" as format 1.0
+    and "v2" as format 2.6 with v2 data pages. A frame with no rows writes
+    one empty part with its schema.
+
+    Executors write under ``.<name>.<uuid>`` next to ``path``, so ``path``
+    must be on a filesystem the driver and the executors share. Once the
+    job succeeds, the driver moves the parts successful tasks reported
+    into place and replaces ``path`` with them; on any failure it removes
+    the staging directory and re-raises, leaving ``path`` as it was.
 
     ``bbox_column=True`` writes the GeoParquet 1.1 ``bbox`` covering column
     (per-row bounds struct + ``covering`` metadata). Combined with the
@@ -191,9 +233,12 @@ def write_geoparquet(
     layout = dict(
         compression=compression,
         compression_level=compression_level,
-        row_group_size=row_group_size or 100_000,
         **_PARQUET_VERSIONS[parquet_version],
     )
+    rows_per_group = row_group_size or 100_000
+    if max_records_per_file:
+        # pyarrow rejects row groups larger than the file cap
+        rows_per_group = min(rows_per_group, max_records_per_file)
     if bbox_column and "bbox" not in features.columns:
         from quackosm_spark.plans.output import geometry_bbox_udf
 
@@ -204,20 +249,31 @@ def write_geoparquet(
         bbox = bbox or computed_bbox
     if encoding == "WKT":
         features = features.withColumn(GEOMETRY_COLUMN, _wkb_to_wkt_udf(GEOMETRY_COLUMN))
-    writer = features.write.mode("overwrite").option("compression", compression)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(str(path))
-    geo_json = json.dumps(
+    geo = json.dumps(
         build_geo_metadata(
             geometry_types, bbox,
             encoding=encoding,
             bbox_covering_column="bbox" if bbox_column else None,
         )
-    )
-    parts = sorted(path.glob("*.parquet"))
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        list(pool.map(lambda p: _stamp_footer(p, geo_json, layout), parts))
+    ).encode()
+    staging = path.absolute().with_name(f".{path.name}.{uuid.uuid4().hex}")
+    attempts = staging / "attempts"
+    attempts.mkdir(parents=True)
+    try:
+        writer = _part_writer(attempts, geo, layout, max_records_per_file or 0, rows_per_group)
+        reported = features.mapInArrow(writer, "part string").collect()
+        for row in reported:
+            os.replace(row.part, staging / Path(row.part).name)
+        shutil.rmtree(attempts)
+        if not reported:
+            empty = to_arrow_schema(features.schema).with_metadata({b"geo": geo})
+            pq.write_table(empty.empty_table(), staging / "part-00000-c000.parquet", **layout)
+        if path.is_dir():
+            shutil.rmtree(path)
+        os.replace(staging, path)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     return path
 
 

@@ -487,9 +487,10 @@ def write_events_stream(
     a no-op). Returns the StreamingQuery; await it with
     ``q.awaitTermination()``.
 
-    This is the native-sink path; for GeoParquet footer stamping wrap the
-    batch write in ``foreachBatch`` with ``sinks.geoparquet`` instead —
-    same checkpoint semantics, custom writer."""
+    This is the native-sink path; for GeoParquet parts with the ``geo``
+    footer wrap the batch write in ``foreachBatch`` with
+    ``sinks.geoparquet`` instead — same checkpoint semantics, custom
+    writer."""
     writer = (
         events.writeStream.format("parquet")
         .option("path", path)

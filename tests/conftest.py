@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from quackosm_spark.sources import pbf_encode  # noqa: E402
 from quackosm_spark.sources.pbf import ELEMENTS_SCHEMA  # noqa: E402
 
 
@@ -25,6 +26,43 @@ def spark():
     )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _release_cached_frames():
+    """Conversions persist frames they never release; drop every cached
+    frame when a test module ends, so that the one driver heap does not
+    fill up over the suite and the late modules do not run GC-bound."""
+    yield
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.catalog.clearCache()
+
+
+@pytest.hookimpl(trylast=True)
+def pytest_runtest_logreport(report):
+    """Stop the run at the first test that fails with the Spark JVM gone, or
+    with its SparkContext stopped (as after a driver heap OutOfMemoryError):
+    every later test would fail the same way. Runs after the terminal
+    reporter, so that failure is still reported."""
+    from pyspark import SparkContext
+
+    jvm = getattr(SparkContext._gateway, "proc", None)
+    if not report.failed or jvm is None:
+        return
+    sc = SparkContext._active_spark_context
+    if jvm.poll() is not None:
+        cause = f"the Spark JVM exited (code {jvm.returncode})"
+    elif sc is not None and sc._jsc.sc().isStopped():
+        cause = "the SparkContext stopped"
+    else:
+        return
+    pytest.exit(
+        f"{cause} during {report.nodeid}; the remaining tests need it",
+        returncode=pytest.ExitCode.TESTS_FAILED,
+    )
 
 
 def _node(id, lat, lon, tags=None):
@@ -103,6 +141,26 @@ def elements(spark):
         ),
     ]
     return spark.createDataFrame(rows, ELEMENTS_SCHEMA)
+
+
+@pytest.fixture(scope="session")
+def grid_pbf(tmp_path_factory):
+    """A 40×40 node grid (every 7th node an ``amenity=bench``) plus 60
+    ``highway=footway`` ways, in several PBF blobs: 290 features."""
+    els = []
+    for i in range(1600):
+        els.append({
+            "kind": "node", "id": i + 1,
+            "tags": {"amenity": "bench"} if i % 7 == 0 else None,
+            "lat": 50.0 + (i // 40) * 1e-3, "lon": 19.0 + (i % 40) * 1e-3,
+        })
+    for w in range(60):
+        first = (w * 23) % 1500 + 1
+        els.append({"kind": "way", "id": 10_000 + w,
+                    "tags": {"highway": "footway"},
+                    "refs": [first, first + 1, first + 41]})
+    path = str(tmp_path_factory.mktemp("grid") / "grid.osm.pbf")
+    return pbf_encode.write_pbf(path, els, elements_per_block=400)
 
 
 MONACO = "/root/reference/tests/test_files/monaco.osm.pbf"

@@ -1,6 +1,8 @@
 """End-to-end conversion on the monaco fixture + GeoParquet sink + caching.
 
-Golden counts are regression values for the in-repo fixture
+The write-path tests (cache, footer, spatial clustering, WKT, covering
+column) run on the generated ``grid_pbf`` fixture from conftest. Golden
+counts are regression values for the monaco fixture
 (/root/reference/tests/test_files/monaco.osm.pbf). Spot-checked features
 match the reference docstring geometries (quackosm/functions.py:180-240)
 coordinate-for-coordinate; the docstring *totals* (8154/5902) belong to a
@@ -75,12 +77,12 @@ def test_grouped_filter(spark):
     assert {r["transport"] for r in vals} <= {"highway=primary", "highway=secondary"}
 
 
-def test_parquet_write_cache_and_geo_metadata(spark, tmp_path):
+def test_parquet_write_cache_and_geo_metadata(spark, tmp_path, grid_pbf):
     out = convert_pbf_to_parquet(
         spark,
-        MONACO,
+        grid_pbf,
         working_directory=tmp_path,
-        tags_filter={"amenity": "cafe"},
+        tags_filter={"amenity": "bench"},
         sort_result=True,
     )
     assert out.exists()
@@ -98,7 +100,7 @@ def test_parquet_write_cache_and_geo_metadata(spark, tmp_path):
     # cache hit: second call returns same path without rewriting
     mtime = part.stat().st_mtime_ns
     again = convert_pbf_to_parquet(
-        spark, MONACO, working_directory=tmp_path, tags_filter={"amenity": "cafe"}
+        spark, grid_pbf, working_directory=tmp_path, tags_filter={"amenity": "bench"}
     )
     assert again == out
     assert part.stat().st_mtime_ns == mtime
@@ -118,13 +120,14 @@ def test_multifile_dedup(spark):
     assert single.count() == double.count()
 
 
-def test_spatial_sort_clusters_output(spark, monaco_features, tmp_path):
+def test_spatial_sort_clusters_output(spark, grid_pbf, tmp_path):
     """O3 quality: after the Hilbert sort, each output file covers a small
     fraction of the dataset extent — the property readers prune on."""
     from quackosm_spark.plans.output import spatial_sort
     from quackosm_spark.sinks.geoparquet import write_geoparquet
 
-    sorted_feats = spatial_sort(monaco_features, num_partitions=8)
+    features = convert_pbf_to_dataframe(spark, grid_pbf)
+    sorted_feats = spatial_sort(features, num_partitions=8)
     out = tmp_path / "sorted.parquet"
     write_geoparquet(sorted_feats, out)
 
@@ -154,12 +157,12 @@ def test_spatial_sort_clusters_output(spark, monaco_features, tmp_path):
     assert avg_area < 0.5 * extent_area
 
 
-def test_save_as_wkt(spark, tmp_path):
+def test_save_as_wkt(spark, tmp_path, grid_pbf):
     out = convert_pbf_to_parquet(
         spark,
-        MONACO,
+        grid_pbf,
         working_directory=tmp_path,
-        tags_filter={"amenity": "cafe"},
+        tags_filter={"amenity": "bench"},
         save_as_wkt=True,
         sort_result=False,
     )
@@ -169,7 +172,7 @@ def test_save_as_wkt(spark, tmp_path):
     assert isinstance(first["geometry"], str) and first["geometry"].startswith("POINT")
 
 
-def test_bbox_covering_column_and_windowed_read(spark, tmp_path):
+def test_bbox_covering_column_and_windowed_read(spark, tmp_path, grid_pbf):
     """GeoParquet 1.1 covering column: per-row bounds struct, covering
     metadata, and bbox-windowed read that prunes via parquet predicates."""
     import json
@@ -179,9 +182,9 @@ def test_bbox_covering_column_and_windowed_read(spark, tmp_path):
 
     out = convert_pbf_to_parquet(
         spark,
-        MONACO,
+        grid_pbf,
         working_directory=tmp_path,
-        tags_filter={"amenity": "cafe"},
+        tags_filter={"amenity": "bench"},
         bbox_column=True,
     )
     # distinct cache name from the non-bbox variant of the same query
@@ -218,9 +221,9 @@ def test_bbox_covering_column_and_windowed_read(spark, tmp_path):
     # fallback path (no covering column) selects the same feature_ids
     out_plain = convert_pbf_to_parquet(
         spark,
-        MONACO,
+        grid_pbf,
         working_directory=tmp_path,
-        tags_filter={"amenity": "cafe"},
+        tags_filter={"amenity": "bench"},
     )
     plain_west = read_geoparquet(spark, out_plain, bbox=window)
     assert {r.feature_id for r in plain_west.select("feature_id").collect()} == {

@@ -1,5 +1,6 @@
 """GeoParquet sink: writer options reach the files, WKT encoding happens in
-the sink, and a conversion computes its geometry stats once."""
+the sink, a conversion computes its geometry stats once, an empty frame
+writes one empty part, and a failed write publishes nothing."""
 
 from __future__ import annotations
 
@@ -8,14 +9,17 @@ import json
 import random
 from pathlib import Path
 
+import duckdb
 import numpy as np
+import pandas as pd
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from quackosm_spark.geometry import model, wkb
 from quackosm_spark.geometry.ops import hilbert_index
 from quackosm_spark.sinks.geoparquet import collect_geo_stats, write_geoparquet
-from quackosm_spark.sources import pbf_encode
 
 _groups = itertools.count()
 
@@ -80,6 +84,22 @@ def test_writer_options_reach_the_files(spark, tmp_path):
         assert meta.format_version == "2.6"
         assert meta.num_row_groups == 1  # default: 100 000 rows per group
 
+    ids = [r["feature_id"] for r in df.select("feature_id").collect()]
+    for group in (120, None):
+        out = write_geoparquet(
+            df, tmp_path / f"cap{group}", max_records_per_file=300, row_group_size=group
+        )
+        parts = _parts(out)
+        rows = [pq.ParquetFile(p).metadata.num_rows for p in parts]
+        assert rows == [300] * 6 + [201]  # one task: files cut every 300 rows
+        for part, n in zip(parts, rows):
+            meta = pq.ParquetFile(part).metadata
+            split = [meta.row_group(i).num_rows for i in range(meta.num_row_groups)]
+            step = min(group or 100_000, n)
+            assert split == [step] * (n // step) + ([n % step] if n % step else [])
+        # the parts, in name order, hold the frame's rows in order
+        assert pq.read_table(out).column("feature_id").to_pylist() == ids
+
     sizes = {}
     for level in (1, 19):
         out = write_geoparquet(df, tmp_path / f"zstd{level}", compression_level=level)
@@ -129,26 +149,6 @@ def test_spatial_sort_with_extent_starts_no_job(spark):
         assert jobs == [], algorithm
 
 
-@pytest.fixture(scope="module")
-def grid_pbf(tmp_path_factory):
-    """A 40×40 node grid (every 7th node tagged) plus tagged ways, in
-    several PBF blobs."""
-    els = []
-    for i in range(1600):
-        els.append({
-            "kind": "node", "id": i + 1,
-            "tags": {"amenity": "bench"} if i % 7 == 0 else None,
-            "lat": 50.0 + (i // 40) * 1e-3, "lon": 19.0 + (i % 40) * 1e-3,
-        })
-    for w in range(60):
-        first = (w * 23) % 1500 + 1
-        els.append({"kind": "way", "id": 10_000 + w,
-                    "tags": {"highway": "footway"},
-                    "refs": [first, first + 1, first + 41]})
-    path = str(tmp_path_factory.mktemp("grid") / "grid.osm.pbf")
-    return pbf_encode.write_pbf(path, els, elements_per_block=400)
-
-
 def test_conversion_computes_stats_once(spark, tmp_path, grid_pbf, monkeypatch):
     import quackosm_spark.functions as fn_mod
     import quackosm_spark.sinks.geoparquet as gp_mod
@@ -193,3 +193,50 @@ def test_hilbert_sorted_parts_have_non_decreasing_keys(spark, tmp_path, grid_pbf
         )
         assert (np.diff(keys) >= 0).all(), part.name
     assert total == 1600 // 7 + 1 + 60
+
+
+def test_zero_row_frame_writes_one_empty_part(spark, tmp_path):
+    empty = spark.createDataFrame(
+        [], "feature_id: string, tags: map<string,string>, geometry: binary"
+    )
+    out = write_geoparquet(empty, tmp_path / "empty.parquet")
+    [part] = _parts(out)
+    assert pq.read_schema(part).names == ["feature_id", "tags", "geometry"]
+    geo = _geo(part)
+    assert geo["columns"]["geometry"]["geometry_types"] == []
+    assert pq.read_table(out).num_rows == 0
+    assert duckdb.sql(f"SELECT count(*) FROM '{out}/*.parquet'").fetchone()[0] == 0
+    assert spark.read.parquet(str(out)).count() == 0
+
+
+@F.pandas_udf(StringType())
+def _failing_udf(values: pd.Series) -> pd.Series:
+    raise ValueError("this write fails on purpose")
+
+
+def test_failed_write_keeps_the_previous_output(spark, tmp_path):
+    df = _wkb_frame(spark, n=300).repartition(4)
+    out = write_geoparquet(df, tmp_path / "out.parquet")
+    before = {p.name: p.read_bytes() for p in _parts(out)}
+    assert len(before) > 1
+
+    failing = df.withColumn("feature_id", _failing_udf("feature_id"))
+    with pytest.raises(Exception, match="this write fails on purpose"):
+        write_geoparquet(failing, out, geometry_types=["Point"], bbox=(0.0, 0.0, 1.0, 1.0))
+    assert {p.name: p.read_bytes() for p in _parts(out)} == before
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["out.parquet"]
+
+
+def test_failed_conversion_is_not_a_cache_hit(spark, tmp_path, grid_pbf, monkeypatch):
+    import quackosm_spark.sinks.geoparquet as gp_mod
+    from quackosm_spark.functions import convert_pbf_to_parquet
+
+    out = tmp_path / "out.parquet"
+    with monkeypatch.context() as patch:
+        patch.setattr(gp_mod, "_wkb_to_wkt_udf", _failing_udf)
+        with pytest.raises(Exception, match="this write fails on purpose"):
+            convert_pbf_to_parquet(spark, grid_pbf, result_file_path=out, save_as_wkt=True)
+    assert sorted(p.name for p in tmp_path.iterdir()) == []
+
+    again = convert_pbf_to_parquet(spark, grid_pbf, result_file_path=out, save_as_wkt=True)
+    assert sum(pq.ParquetFile(p).metadata.num_rows for p in _parts(again)) == 1600 // 7 + 1 + 60
