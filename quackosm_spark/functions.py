@@ -12,6 +12,7 @@ from pathlib import Path
 from typing import Any, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from quackosm_spark import cache
 from quackosm_spark.filters.tags import merge_osm_tags_filter
@@ -20,13 +21,16 @@ from quackosm_spark.plans.pipeline import (
     build_features,
 )
 from quackosm_spark.plans.output import (
+    BOUNDS_COLUMN,
     dedup_features,
     drop_empty_columns,
     explode_tags_to_columns,
     group_tags_to_columns,
     keep_relevant_tags,
     spatial_sort,
+    with_bounds,
 )
+from quackosm_spark.plans.persist import persist, released
 from quackosm_spark.sinks.geoparquet import write_geoparquet
 from quackosm_spark.sources.pbf import read_osm_pbf
 
@@ -221,40 +225,47 @@ def convert_pbf_to_parquet(
     if result_file_path.exists() and not ignore_cache:
         return result_file_path
 
-    features = convert_pbf_to_dataframe(
-        spark,
-        pbf_path,
-        tags_filter=tags_filter,
-        keep_all_tags=keep_all_tags,
-        explode_tags=explode_tags,
-        geometry_filter=geometry_filter,
-        custom_sql_filter=custom_sql_filter,
-        filter_osm_ids=filter_osm_ids,
-        ignore_metadata_tags=ignore_metadata_tags,
-        osm_way_polygon_features_config=osm_way_polygon_features_config,
-    )
-    # stats once, on the unsorted features: the extent keys the sort and the
-    # types + bbox go to the footer
-    from quackosm_spark.sinks.geoparquet import collect_geo_stats
+    # the features are built once: persisted with their bounds, which the
+    # stats, the sort keys and the covering column read; every frame the
+    # conversion persists is released when the write is done or fails
+    with released():
+        features = convert_pbf_to_dataframe(
+            spark,
+            pbf_path,
+            tags_filter=tags_filter,
+            keep_all_tags=keep_all_tags,
+            explode_tags=explode_tags,
+            geometry_filter=geometry_filter,
+            custom_sql_filter=custom_sql_filter,
+            filter_osm_ids=filter_osm_ids,
+            ignore_metadata_tags=ignore_metadata_tags,
+            osm_way_polygon_features_config=osm_way_polygon_features_config,
+        )
+        features = persist(with_bounds(features))
+        # stats once, on the unsorted features: the extent keys the sort and
+        # the types + bbox go to the footer; this action fills the cache
+        from quackosm_spark.sinks.geoparquet import collect_geo_stats
 
-    geometry_types, bbox = collect_geo_stats(features)
-    if sort_result:
-        features = spatial_sort(features, extent=bbox, algorithm=sort_algorithm)
-    # WKT outputs carry the same geo metadata as WKB ones (reference
-    # tests/base/test_pbf_file_reader.py:95-98)
-    write_geoparquet(
-        features,
-        result_file_path,
-        geometry_types=geometry_types,
-        bbox=bbox,
-        compression=compression,
-        compression_level=compression_level,
-        row_group_size=row_group_size,
-        parquet_version=parquet_version,
-        max_records_per_file=max_records_per_file,
-        bbox_column=bbox_column,
-        encoding="WKT" if save_as_wkt else "WKB",
-    )
+        geometry_types, bbox = collect_geo_stats(features)
+        if bbox_column:
+            features = features.withColumn("bbox", F.col(BOUNDS_COLUMN))
+        if sort_result:
+            features = spatial_sort(features, extent=bbox, algorithm=sort_algorithm)
+        # WKT outputs carry the same geo metadata as WKB ones (reference
+        # tests/base/test_pbf_file_reader.py:95-98)
+        write_geoparquet(
+            features,
+            result_file_path,
+            geometry_types=geometry_types,
+            bbox=bbox,
+            compression=compression,
+            compression_level=compression_level,
+            row_group_size=row_group_size,
+            parquet_version=parquet_version,
+            max_records_per_file=max_records_per_file,
+            bbox_column=bbox_column,
+            encoding="WKT" if save_as_wkt else "WKB",
+        )
     return result_file_path
 
 

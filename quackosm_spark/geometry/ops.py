@@ -248,6 +248,11 @@ def hilbert_index(
     Standard xy→d bit-twiddling (public algorithm, e.g. Wikipedia
     "Hilbert curve"), vectorized over numpy arrays. ``order=16`` → 32-bit
     keys, plenty of resolution for row-group clustering.
+
+    The spatial sort computes the same keys in the JVM
+    (``plans.output.with_hilbert_key``); this function is its test oracle.
+    A NaN centroid has no defined key here (numpy casts NaN to an
+    arbitrary integer); the JVM key is null for it.
     """
     minx, miny, maxx, maxy = extent
     n = np.int64(1) << order

@@ -126,8 +126,9 @@ def _read_seq(buf: memoryview, off: int, fmt: str) -> tuple[list[list[float]], i
 
 
 def geometry_type(data: bytes) -> str:
-    """Fast WKB type sniff without full decode (for geo metadata, A8)."""
+    """Fast WKB type sniff without full decode (for geo metadata, A8). The
+    low 16 bits of the type code modulo 1000 name the base type, so EWKB
+    flag bits and ISO Z/M/ZM offsets (1000/2000/3000) are tolerated."""
     little = data[0] == 1
     (code,) = struct.unpack_from("<I" if little else ">I", data, 1)
-    code &= 0xFF
-    return _WKB_NAME[code % 1000 if code >= 1000 else code]
+    return _WKB_NAME[(code & 0xFFFF) % 1000]

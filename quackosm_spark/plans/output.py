@@ -12,15 +12,16 @@ from typing import Optional
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from quackosm_spark.constants import FEATURES_INDEX
+from quackosm_spark.constants import FEATURES_INDEX, GEOMETRY_COLUMN
 from quackosm_spark.filters.tags import (
     GroupedOsmTagsFilter,
     OsmTagsFilter,
     merge_osm_tags_filter,
 )
 from quackosm_spark.geometry import wkb as wkb_codec
+from quackosm_spark.plans.persist import persist
 
 
 def explode_tags_to_columns(
@@ -192,9 +193,7 @@ def drop_empty_columns(features: DataFrame, protected: tuple[str, ...] = (FEATUR
     # the counts pass below is an ACTION; without persisting, it would run
     # the full upstream pipeline once here and again for the caller's own
     # action (measured: 2× conversion time in exploded mode)
-    from pyspark import StorageLevel
-
-    features = features.persist(StorageLevel.MEMORY_AND_DISK)
+    features = persist(features)
     counts = features.select(
         [F.count(F.col(f"`{c}`")).alias(c) for c in candidates]
     ).collect()[0]
@@ -216,9 +215,13 @@ def spatial_sort(
     """O3 spatial sort (reference dispatch pbf_file_reader.py:4021-4043).
 
     Both algorithms key on the geometry centroid, the midpoint of the
-    ``geometry_bbox_udf`` bounds (one WKB decode per row).
+    per-feature bounds. They read the private bounds column when the frame
+    carries it (``convert_pbf_to_parquet`` caches it with the features) and
+    add it with ``with_bounds`` otherwise. The bounds are dropped before
+    the range shuffle; only the keys cross it.
 
-    ``algorithm="hilbert"`` (default): curve key of the centroid →
+    ``algorithm="hilbert"`` (default): the Hilbert key of the centroid,
+    computed in the JVM (``with_hilbert_key``) →
     ``repartitionByRange`` + ``sortWithinPartitions`` so readers get
     row-group pruning by locality. ``extent`` defaults to the dataset bbox
     from ``collect_geo_stats`` (one aggregate job); pass it to start no job
@@ -233,50 +236,107 @@ def spatial_sort(
     """
     if algorithm not in ("hilbert", "str"):
         raise ValueError(f"Unknown sort algorithm: {algorithm!r} (str|hilbert)")
-    keyed = features.withColumn("__bb", geometry_bbox_udf("geometry")).withColumn(
-        "__cx", (F.col("__bb.xmin") + F.col("__bb.xmax")) / 2.0
-    ).withColumn("__cy", (F.col("__bb.ymin") + F.col("__bb.ymax")) / 2.0)
+    bounds = F.col(BOUNDS_COLUMN)
+    cx = (bounds["xmin"] + bounds["xmax"]) / 2.0
+    cy = (bounds["ymin"] + bounds["ymax"]) / 2.0
+    keyed = with_bounds(features)
     if algorithm == "str":
         range_key, sort_key = "__cx", "__cy"
+        keyed = keyed.withColumns({range_key: cx, sort_key: cy})
     else:
         if extent is None:
             from quackosm_spark.sinks.geoparquet import collect_geo_stats
 
             extent = collect_geo_stats(features)[1]
-
-        @F.pandas_udf(LongType())
-        def _hilbert_key(cx: pd.Series, cy: pd.Series) -> pd.Series:
-            from quackosm_spark.geometry.ops import hilbert_index
-
-            return pd.Series(hilbert_index(cx.to_numpy(), cy.to_numpy(), extent))
-
-        # only the key crosses the shuffle
-        keyed = keyed.withColumn("__hilbert", _hilbert_key("__cx", "__cy")).drop(
-            "__bb", "__cx", "__cy"
-        )
         range_key = sort_key = "__hilbert"
+        keyed = with_hilbert_key(keyed, cx, cy, extent, range_key)
+    keyed = keyed.drop(BOUNDS_COLUMN)
     ranged = (
         keyed.repartitionByRange(num_partitions, range_key)
         if num_partitions
         else keyed.repartitionByRange(range_key)
     )
-    return ranged.sortWithinPartitions(sort_key).drop(
-        "__bb", "__cx", "__cy", "__hilbert"
-    )
+    return ranged.sortWithinPartitions(sort_key).drop(range_key, sort_key)
 
 
-from pyspark.sql.types import DoubleType, StructField, StructType
+def _hilbert_steps() -> tuple[list[int], list[int]]:
+    """``hilbert_index``'s per-level step as two tables indexed by
+    ``4 * state + quad``: the next state and the base-4 digit. ``quad`` is
+    ``2 * x_bit + y_bit`` of the cell at this level; ``state`` is
+    ``2 * swapped + complemented``, how the levels above rotated the cell.
+    Only the bits below the level matter from here on, and for those
+    ``s - 1 - x`` is the complement."""
+    steps, digits = [], []
+    for state in range(4):
+        swapped, complemented = state >> 1, state & 1
+        for quad in range(4):
+            bx, by = quad >> 1, quad & 1
+            rx = (by if swapped else bx) ^ complemented
+            ry = (bx if swapped else by) ^ complemented
+            digits.append((3 * rx) ^ ry)
+            steps.append(2 * (swapped ^ (ry == 0)) + (complemented ^ (ry == 0 and rx == 1)))
+    return steps, digits
+
+
+# Bit levels per projection of the Hilbert key. Every projection costs the
+# driver one analysis of the whole conversion plan (tens of ms at the
+# bench size), but within one projection each level's state is repeated
+# in every later digit, so the expression grows quadratically: at 8 levels
+# the generated code got too large and keys took 20 s per 2M rows on
+# 4 cores, against 0.9 s at 4 levels.
+_LEVELS_PER_PROJECTION = 4
+
+
+def with_hilbert_key(
+    frame: DataFrame,
+    cx: Column,
+    cy: Column,
+    extent: tuple[float, float, float, float],
+    name: str,
+    order: int = 16,
+) -> DataFrame:
+    """``frame`` with column ``name`` = ``geometry.ops.hilbert_index`` of
+    the centroid ``(cx, cy)``, computed in the JVM: the same scaling into
+    ``extent`` (clamped to the grid), then one lookup of the next state
+    and digit per bit level (``_hilbert_steps``), so the keys are equal. A NaN or null centroid gets a null key, which sorts
+    first."""
+    minx, miny, maxx, maxy = extent
+    top = float((1 << order) - 1)
+
+    def cell(v: Column, lo: float, hi: float) -> Column:
+        scaled = (v - lo) / (hi - lo or 1.0) * top
+        return F.least(F.greatest(scaled, F.lit(0.0)), F.lit(top)).cast("long")
+
+    # SQL text, not Column calls: each Column call is a round trip to the JVM
+    steps, digits = (f"array({', '.join(map(str, t))})" for t in _hilbert_steps())
+    frame = frame.withColumns({"__hx": cell(cx, minx, maxx), "__hy": cell(cy, miny, maxy)})
+    state, key = "0", "0L"
+    for level in reversed(range(order)):
+        quad = f"int((shiftright(__hx, {level}) & 1) * 2 + (shiftright(__hy, {level}) & 1))"
+        at = f"{state} * 4 + {quad}"
+        state, key = f"{steps}[{at}]", f"({key}) * 4 + {digits}[{at}]"
+        if level % _LEVELS_PER_PROJECTION == 0:
+            frame = frame.withColumns({"__hs": F.expr(state), name: F.expr(key)})
+            state, key = "__hs", f"`{name}`"
+    finite = cx.isNotNull() & cy.isNotNull() & ~F.isnan(cx) & ~F.isnan(cy)
+    return frame.withColumn(name, F.when(finite, F.col(name))).drop("__hx", "__hy", "__hs")
+
 
 _BBOX_STRUCT = StructType(
     [StructField(side, DoubleType()) for side in ("xmin", "ymin", "xmax", "ymax")]
 )
 
+# the private per-feature bounds column; see ``with_bounds``
+BOUNDS_COLUMN = "__bounds"
+
 
 @F.pandas_udf(_BBOX_STRUCT)
 def geometry_bbox_udf(geometry: pd.Series) -> pd.DataFrame:
-    """Per-feature bounds struct — ONE WKB decode per row. Feeds the
-    GeoParquet 1.1 bbox covering column, the footer extent
-    (``collect_geo_stats``) and the sort centroid (``spatial_sort``)."""
+    """Per-feature bounds struct — ONE WKB decode per row, the only one on
+    the write path. ``with_bounds`` adds it as a column once; the footer
+    extent (``collect_geo_stats``), the sort centroid (``spatial_sort``)
+    and the GeoParquet 1.1 bbox covering column all read that column.
+    Empty geometries get NaN bounds."""
     from quackosm_spark.geometry import model
 
     rows = [
@@ -284,3 +344,11 @@ def geometry_bbox_udf(geometry: pd.Series) -> pd.DataFrame:
         for b in geometry
     ]
     return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
+
+
+def with_bounds(features: DataFrame) -> DataFrame:
+    """``features`` with the private ``BOUNDS_COLUMN`` (the
+    ``geometry_bbox_udf`` struct), added only when it is missing."""
+    if BOUNDS_COLUMN in features.columns:
+        return features
+    return features.withColumn(BOUNDS_COLUMN, geometry_bbox_udf(GEOMETRY_COLUMN))

@@ -65,6 +65,7 @@ from quackosm_spark.geometry.ops import (
     remove_repeated_points,
     ring_within_ring,
 )
+from quackosm_spark.plans.persist import persist
 
 Geometry = dict[str, Any]
 
@@ -150,9 +151,7 @@ def build_features(
     # decoded once, mirroring the reference's stage materialization
     # (pbf_file_reader.py:1527-2168) without its disk round-trips. At cluster
     # scale swap MEMORY_AND_DISK for DISK_ONLY or a checkpoint dir.
-    from pyspark import StorageLevel
-
-    elements = elements.persist(StorageLevel.MEMORY_AND_DISK)
+    elements = persist(elements)
     nodes, ways, relations = split_elements(elements)
 
     # ---- wildcard key expansion (P4) needs one data pass --------------------
@@ -215,10 +214,9 @@ def build_features(
     ways_required_ids = relations_unnested.select(F.col("ref").alias("id")).distinct()
     ways_filtered_required_ids = ways_filtered_ids.union(ways_required_ids).distinct()
 
-    ways_unnested = (
+    ways_unnested = persist(
         ways.join(ways_filtered_required_ids, "id", "left_semi")
         .select("id", F.posexplode("refs").alias("ref_idx", "ref"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
     nodes_required_ids = ways_unnested.select(F.col("ref").alias("id")).distinct()
@@ -271,9 +269,7 @@ def build_features(
     final_node_ids = nodes_filtered_ids.union(
         ways_unnested.select(F.col("ref").alias("id")).distinct()
     ).distinct()
-    node_points = node_points_all.join(final_node_ids, "id", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    node_points = persist(node_points_all.join(final_node_ids, "id", "left_semi"))
 
     # ---- C4: referential validity (J2 applied twice) -------------------------
     ways_valid_ids = _valid_ids_by_refs(ways_unnested, node_points.select("id"))
@@ -322,9 +318,7 @@ def build_features(
     )
 
     # ---- C7: way → linestring (the big shuffle join J4) ----------------------
-    way_linestrings = _assemble_way_linestrings(ways_unnested, node_points).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    way_linestrings = persist(_assemble_way_linestrings(ways_unnested, node_points))
     filtered_way_linestrings = way_linestrings.join(
         ways_filtered_valid_ids, "id", "left_semi"
     )

@@ -29,12 +29,14 @@ import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark import TaskContext
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType
 
 from quackosm_spark.constants import GEOMETRY_COLUMN
+from quackosm_spark.geometry.wkb import _WKB_NAME
+from quackosm_spark.plans.output import BOUNDS_COLUMN, geometry_bbox_udf, with_bounds
 
 # PROJJSON for OGC:CRS84 (lon/lat WGS84) — the fixed output CRS (§1.3).
 CRS_LONLAT = {
@@ -100,15 +102,17 @@ def build_geo_metadata(
 
 
 def collect_geo_stats(features: DataFrame) -> tuple[list[str], tuple[float, float, float, float]]:
-    """A7 extent + A8 distinct geometry types in ONE aggregate job: one WKB
-    decode per row feeds both the bounds struct and the type sniff. No rows
-    give null bounds, which map to ``([], (0.0, 0.0, 0.0, 0.0))``."""
-    from quackosm_spark.plans.output import geometry_bbox_udf
-
+    """A7 extent + A8 distinct geometry types in ONE aggregate job. The
+    extent reads the per-feature bounds column (``with_bounds`` adds it
+    when the frame lacks it), the types come from ``geometry_type_expr``
+    on the WKB header. In a conversion this action is the one that
+    materializes the cached features. No rows give null bounds, which map
+    to ``([], (0.0, 0.0, 0.0, 0.0))``."""
     stats = (
-        features.select(
-            _geometry_type_udf(GEOMETRY_COLUMN).alias("__t"),
-            geometry_bbox_udf(GEOMETRY_COLUMN).alias("__bb"),
+        with_bounds(features)
+        .select(
+            geometry_type_expr(F.col(GEOMETRY_COLUMN)).alias("__t"),
+            F.col(BOUNDS_COLUMN).alias("__bb"),
         )
         .agg(
             F.collect_set("__t").alias("types"),
@@ -124,13 +128,21 @@ def collect_geo_stats(features: DataFrame) -> tuple[list[str], tuple[float, floa
     return sorted(stats["types"]), (stats["minx"], stats["miny"], stats["maxx"], stats["maxy"])
 
 
-@F.pandas_udf(StringType())
-def _geometry_type_udf(geometry: pd.Series) -> pd.Series:
-    from quackosm_spark.geometry.wkb import geometry_type
-
-    return pd.Series(
-        [geometry_type(bytes(b)) if b is not None else None for b in geometry]
-    )
+def geometry_type_expr(geometry: Column) -> Column:
+    """``geometry.wkb.geometry_type`` as a JVM expression on the 5-byte
+    WKB header: the byte order, then the low 16 bits of the type code
+    modulo 1000, so EWKB flag bits and ISO Z/M/ZM offsets map to the base
+    type. A null geometry gives null."""
+    header = F.hex(F.substring(geometry, 1, 5))
+    low16 = F.when(
+        F.substring(header, 1, 2) == "01",
+        F.concat(F.substring(header, 5, 2), F.substring(header, 3, 2)),
+    ).otherwise(F.substring(header, 7, 4))
+    code = F.conv(low16, 16, 10).cast("int") % 1000
+    name = F.lit(None).cast("string")
+    for type_code, type_name in _WKB_NAME.items():
+        name = F.when(code == type_code, type_name).otherwise(name)
+    return name
 
 
 @F.pandas_udf(StringType())
@@ -240,13 +252,12 @@ def write_geoparquet(
         # pyarrow rejects row groups larger than the file cap
         rows_per_group = min(rows_per_group, max_records_per_file)
     if bbox_column and "bbox" not in features.columns:
-        from quackosm_spark.plans.output import geometry_bbox_udf
-
-        features = features.withColumn("bbox", geometry_bbox_udf(GEOMETRY_COLUMN))
+        features = with_bounds(features).withColumn("bbox", F.col(BOUNDS_COLUMN))
     if geometry_types is None or bbox is None:
         computed_types, computed_bbox = collect_geo_stats(features)
         geometry_types = geometry_types or computed_types
         bbox = bbox or computed_bbox
+    features = features.drop(BOUNDS_COLUMN)
     if encoding == "WKT":
         features = features.withColumn(GEOMETRY_COLUMN, _wkb_to_wkt_udf(GEOMETRY_COLUMN))
     geo = json.dumps(
@@ -297,8 +308,6 @@ def read_geoparquet(spark, path: str | Path, bbox: tuple[float, float, float, fl
             & (F.col("bbox.ymin") <= ymax)
             & (F.col("bbox.ymax") >= ymin)
         )
-    from quackosm_spark.plans.output import geometry_bbox_udf
-
     b = geometry_bbox_udf(GEOMETRY_COLUMN)
     return (
         df.withColumn("__b", b)

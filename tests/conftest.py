@@ -30,9 +30,11 @@ def spark():
 
 @pytest.fixture(scope="module", autouse=True)
 def _release_cached_frames():
-    """Conversions persist frames they never release; drop every cached
-    frame when a test module ends, so that the one driver heap does not
-    fill up over the suite and the late modules do not run GC-bound."""
+    """Operators leave their one cached frame to the caller, and tests and
+    ``convert_pbf_to_dataframe`` cache frames of their own (conversions to
+    files release theirs); drop every cached frame when a test module
+    ends, so that the one driver heap does not fill up over the suite and
+    the late modules do not run GC-bound."""
     yield
     from pyspark.sql import SparkSession
 

@@ -19,12 +19,20 @@ Either way the contract this test enforces: ONE operator call leaves AT
 MOST ONE materialized cached frame behind. Round 7's
 ``logprob_band_filter`` left two (its scored frame plus the unigram
 LM's token arrays) — ADVICE r07 #3.
+
+A conversion entry point (``convert_pbf_to_parquet``) owns its whole run,
+the write included, so it leaves NO cached frame behind: it releases
+every frame it persisted, on success and on failure, and leaves the
+caller's own cached frames alone.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 EVENTS = "/root/testdata/sf0.001/events.parquet"
@@ -169,3 +177,51 @@ def test_domain_mix_report_leaves_one_cache(clean_cache):
     )
     domain_mix_report(docs).count()
     _assert_leaks_at_most_one(spark, "domain_mix_report")
+
+
+def test_conversion_leaves_no_cache_behind(clean_cache, grid_pbf, tmp_path):
+    spark = clean_cache
+    from quackosm_spark.functions import convert_pbf_to_parquet
+
+    convert_pbf_to_parquet(spark, grid_pbf, result_file_path=tmp_path / "sorted")
+    assert _cached_rdd_count(spark) == 0
+    convert_pbf_to_parquet(
+        spark, grid_pbf, result_file_path=tmp_path / "filtered",
+        tags_filter={"amenity": "bench", "highway": True}, explode_tags=True,
+        sort_result=False,
+    )
+    assert _cached_rdd_count(spark) == 0
+
+
+@F.pandas_udf(StringType())
+def _failing_udf(values: pd.Series) -> pd.Series:
+    raise ValueError("this conversion fails on purpose")
+
+
+def test_failed_conversion_leaves_no_cache_behind(clean_cache, grid_pbf, tmp_path, monkeypatch):
+    spark = clean_cache
+    import quackosm_spark.sinks.geoparquet as gp_mod
+    from quackosm_spark.functions import convert_pbf_to_parquet
+
+    monkeypatch.setattr(gp_mod, "_wkb_to_wkt_udf", _failing_udf)
+    with pytest.raises(Exception, match="this conversion fails on purpose"):
+        convert_pbf_to_parquet(
+            spark, grid_pbf, result_file_path=tmp_path / "out", save_as_wkt=True
+        )
+    assert _cached_rdd_count(spark) == 0
+
+
+def test_conversion_keeps_the_callers_cached_frames(clean_cache, grid_pbf, tmp_path):
+    """The caller's frames stay cached, the one whose plan the conversion
+    persists too (the decoded elements) included."""
+    spark = clean_cache
+    from quackosm_spark.functions import convert_pbf_to_parquet
+    from quackosm_spark.sources.pbf import read_osm_pbf
+
+    elements = read_osm_pbf(spark, grid_pbf).cache()
+    numbers = spark.range(1000).cache()
+    assert elements.count() == 1660 and numbers.count() == 1000
+    convert_pbf_to_parquet(spark, grid_pbf, result_file_path=tmp_path / "out")
+    assert elements.storageLevel != StorageLevel.NONE
+    assert numbers.storageLevel != StorageLevel.NONE
+    assert _cached_rdd_count(spark) == 2

@@ -149,15 +149,72 @@ def test_spatial_sort_with_extent_starts_no_job(spark):
         assert jobs == [], algorithm
 
 
-def test_conversion_computes_stats_once(spark, tmp_path, grid_pbf, monkeypatch):
+def _is_python(name: str) -> bool:
+    return any(k in name for k in ("Python", "Arrow", "Pandas"))
+
+
+def _inputs(node) -> list:
+    """The child plans of a physical plan node, seen through the adaptive
+    execution wrappers (adaptive plan, query stages, reused exchanges)."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if name.endswith("QueryStage"):
+        return [node.plan()]
+    if name == "ReusedExchange":
+        return [node.child()]
+    children = node.children()
+    return [children.apply(i) for i in range(children.size())]
+
+
+def _is_bbox_udf(node) -> bool:
+    return node.nodeName() == "ArrowEvalPython" and "geometry_bbox_udf" in node.simpleString(100)
+
+
+def _split_at_caches(plan):
+    """Walk a physical plan down to its cached relations: return the nodes
+    above them and the physical plans of the cached relations."""
+    above, cached, stack = [], [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "InMemoryTableScan":
+            cached.append(node.relation().cachedPlan())
+            continue
+        above.append(node)
+        stack.extend(_inputs(node))
+    return above, cached
+
+
+def _bbox_udf_evaluations(plan) -> int:
+    """The most ``geometry_bbox_udf`` nodes on one path from ``plan`` down
+    to its cached relations: how often one row's bounds are computed."""
+    if plan.nodeName() == "InMemoryTableScan":
+        return 0
+    below = [_bbox_udf_evaluations(child) for child in _inputs(plan)]
+    return _is_bbox_udf(plan) + max(below, default=0)
+
+
+def _conversion_actions(spark, tmp_path, grid_pbf, monkeypatch):
+    """Convert ``grid_pbf`` with the defaults (WKB, Hilbert sort); return
+    the physical plans of the frames the conversion collects (the stats
+    aggregate, then the write) and the number of ``collect_geo_stats``
+    calls."""
     import quackosm_spark.functions as fn_mod
     import quackosm_spark.sinks.geoparquet as gp_mod
 
-    calls = []
+    calls, plans = [], []
     real_stats = gp_mod.collect_geo_stats
     monkeypatch.setattr(
         gp_mod, "collect_geo_stats", lambda df: calls.append(1) or real_stats(df)
     )
+    frame_class = type(spark.range(1))
+    real_collect = frame_class.collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().sparkPlan())
+        return real_collect(self)
+
+    monkeypatch.setattr(frame_class, "collect", recording_collect)
     sort_jobs = []
     real_sort = fn_mod.spatial_sort
 
@@ -170,8 +227,33 @@ def test_conversion_computes_stats_once(spark, tmp_path, grid_pbf, monkeypatch):
     fn_mod.convert_pbf_to_parquet(
         spark, grid_pbf, result_file_path=tmp_path / "out.parquet"
     )
-    assert len(calls) == 1
     assert sort_jobs == []
+    return plans, len(calls)
+
+
+def test_conversion_computes_stats_once(spark, tmp_path, grid_pbf, monkeypatch):
+    """One ``collect_geo_stats`` call, and ``geometry_bbox_udf`` runs once:
+    below the cache that both the stats and the write read."""
+    (stats, write), calls = _conversion_actions(spark, tmp_path, grid_pbf, monkeypatch)
+    assert calls == 1
+    for plan in (stats, write):
+        assert _bbox_udf_evaluations(plan) == 0
+        [features] = _split_at_caches(plan)[1]
+        assert _bbox_udf_evaluations(features) == 1
+    assert _split_at_caches(stats)[1][0].sameResult(_split_at_caches(write)[1][0])
+
+
+def test_write_plan_has_one_python_node_above_the_cache(spark, tmp_path, grid_pbf, monkeypatch):
+    """The sorted frame the writer receives is JVM-only above the cached
+    features: the Hilbert key and the type sniff run no Python, so the
+    ``mapInArrow`` writer is the one Python node of the write."""
+    (stats, write), _ = _conversion_actions(spark, tmp_path, grid_pbf, monkeypatch)
+    above, cached = _split_at_caches(write)
+    assert len(cached) == 1
+    assert [n.nodeName() for n in above if _is_python(n.nodeName())] == ["MapInArrow"]
+    assert above[0].nodeName() == "MapInArrow"
+    above, _ = _split_at_caches(stats)
+    assert [n.nodeName() for n in above if _is_python(n.nodeName())] == []
 
 
 def test_hilbert_sorted_parts_have_non_decreasing_keys(spark, tmp_path, grid_pbf):
