@@ -5,7 +5,7 @@ The reference (read-only at /root/reference) converts OpenStreetMap
 ``*.osm.pbf`` files into analysis-ready GeoParquet via generated DuckDB SQL.
 This package re-expresses every operator of that pipeline Spark-first:
 
-- ``sources.pbf``      — a PySpark Python DataSource decoding OSM PBF blobs
+- ``sources.pbf``      — OSM PBF blobs decoded in Arrow-batched Python tasks
                          (reference: quackosm/pbf_file_reader.py:1199 ST_READOSM)
 - ``filters.tags``     — the OsmTagsFilter algebra compiled to Spark Columns
                          (reference: quackosm/_osm_tags_filters.py)

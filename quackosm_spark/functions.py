@@ -128,7 +128,9 @@ def convert_pbf_to_dataframe(
     # the expanded filter drives BOTH the pipeline prefilter and the output
     # shaping below — mirroring the reference, where the expanded filter is
     # stored and read by the SQL filter AND the select generator
-    # (pbf_file_reader.py:1205-1206, 3699-3809).
+    # (pbf_file_reader.py:1205-1206, 3699-3809). The elements are persisted
+    # first, so that pass and the features read one decode.
+    elements = persist(elements)
     tags_filter = expand_wildcard_keys(elements, tags_filter)
     opts = PbfPipelineOptions(
         tags_filter=tags_filter,
@@ -251,6 +253,11 @@ def convert_pbf_to_parquet(
             features = features.withColumn("bbox", F.col(BOUNDS_COLUMN))
         if sort_result:
             features = spatial_sort(features, extent=bbox, algorithm=sort_algorithm)
+        else:
+            # the features' partitioning is whatever the plan's joins and
+            # AQE's coalescing left; rebalanced to the advisory partition
+            # size, the part count follows the output size instead
+            features = features.hint("rebalance")
         # WKT outputs carry the same geo metadata as WKB ones (reference
         # tests/base/test_pbf_file_reader.py:95-98)
         write_geoparquet(

@@ -1,6 +1,7 @@
 """WKB (ISO well-known binary) encode/decode for GeoJSON-style dicts.
 
-Little-endian, 2D only — matching what GeoParquet 1.1.0 stores. Used inside
+Writes little-endian 2D, matching what GeoParquet 1.1.0 stores; reads
+either byte order, ISO or EWKB, and drops Z and M. Used inside
 Arrow-vectorized pandas UDFs, so encoding is plain ``struct`` packing per
 geometry (geometry counts per row are small; the batch-level vectorization
 comes from Arrow moving the rows, not from numpy-vectorizing the packer).
@@ -71,64 +72,71 @@ def _write_seq(coords: list[list[float]], out: bytearray) -> None:
 
 
 def loads(data: bytes) -> Geometry:
+    """Decode ISO WKB or EWKB (either byte order) to a 2D geometry: Z and M
+    ordinates are read and dropped, an EWKB SRID is skipped."""
     geom, _ = _read(memoryview(data), 0)
     return geom
 
 
-def _read(buf: memoryview, off: int) -> tuple[Geometry, int]:
-    little = buf[off] == 1
-    fmt = "<" if little else ">"
-    (type_code,) = struct.unpack_from(fmt + "I", buf, off + 1)
-    type_code &= 0xFF  # tolerate EWKB flag bits / ISO 1000-offsets
-    t = _WKB_NAME[type_code % 1000 if type_code >= 1000 else type_code]
+def _header(buf: memoryview, off: int) -> tuple[str, str, int, int]:
+    """(struct byte order, type name, ordinates per point, offset after the
+    header). The low 16 bits of the type code modulo 1000 name the base
+    type; Z and M come from the ISO 1000/2000/3000 offsets or the EWKB flag
+    bits."""
+    fmt = "<" if buf[off] == 1 else ">"
+    (code,) = struct.unpack_from(fmt + "I", buf, off + 1)
     off += 5
+    base, iso = (code & 0xFFFF) % 1000, (code & 0xFFFF) // 1000
+    if base not in _WKB_NAME:
+        raise ValueError(f"Unsupported WKB type code: {code}")
+    has_z = bool(code & 0x80000000) or iso in (1, 3)
+    has_m = bool(code & 0x40000000) or iso in (2, 3)
+    if code & 0x20000000:  # EWKB SRID
+        off += 4
+    return fmt, _WKB_NAME[base], 2 + has_z + has_m, off
+
+
+def _read(buf: memoryview, off: int) -> tuple[Geometry, int]:
+    fmt, t, dims, off = _header(buf, off)
     if t == "Point":
         x, y = struct.unpack_from(fmt + "dd", buf, off)
-        return {"type": t, "coordinates": [x, y]}, off + 16
+        return {"type": t, "coordinates": [x, y]}, off + 8 * dims
     if t == "LineString":
-        coords, off = _read_seq(buf, off, fmt)
+        coords, off = _read_seq(buf, off, fmt, dims)
         return {"type": t, "coordinates": coords}, off
     if t == "Polygon":
         (n,) = struct.unpack_from(fmt + "I", buf, off)
         off += 4
         rings = []
         for _ in range(n):
-            ring, off = _read_seq(buf, off, fmt)
+            ring, off = _read_seq(buf, off, fmt, dims)
             rings.append(ring)
         return {"type": t, "coordinates": rings}, off
-    if t in ("MultiPoint", "MultiLineString", "MultiPolygon"):
-        (n,) = struct.unpack_from(fmt + "I", buf, off)
-        off += 4
-        parts = []
-        for _ in range(n):
-            g, off = _read(buf, off)
-            parts.append(g["coordinates"])
-        return {"type": t, "coordinates": parts}, off
+    (n,) = struct.unpack_from(fmt + "I", buf, off)
+    off += 4
+    members = []
+    for _ in range(n):
+        g, off = _read(buf, off)
+        members.append(g)
     if t == "GeometryCollection":
-        (n,) = struct.unpack_from(fmt + "I", buf, off)
-        off += 4
-        geoms = []
-        for _ in range(n):
-            g, off = _read(buf, off)
-            geoms.append(g)
-        return {"type": t, "geometries": geoms}, off
-    raise ValueError(f"Unsupported WKB type code: {type_code}")
+        return {"type": t, "geometries": members}, off
+    return {"type": t, "coordinates": [g["coordinates"] for g in members]}, off
 
 
-def _read_seq(buf: memoryview, off: int, fmt: str) -> tuple[list[list[float]], int]:
+def _read_seq(
+    buf: memoryview, off: int, fmt: str, dims: int
+) -> tuple[list[list[float]], int]:
     (n,) = struct.unpack_from(fmt + "I", buf, off)
     off += 4
     coords = []
     for i in range(n):
-        x, y = struct.unpack_from(fmt + "dd", buf, off + i * 16)
+        x, y = struct.unpack_from(fmt + "dd", buf, off + i * 8 * dims)
         coords.append([x, y])
-    return coords, off + n * 16
+    return coords, off + n * 8 * dims
 
 
 def geometry_type(data: bytes) -> str:
     """Fast WKB type sniff without full decode (for geo metadata, A8). The
     low 16 bits of the type code modulo 1000 name the base type, so EWKB
     flag bits and ISO Z/M/ZM offsets (1000/2000/3000) are tolerated."""
-    little = data[0] == 1
-    (code,) = struct.unpack_from("<I" if little else ">I", data, 1)
-    return _WKB_NAME[(code & 0xFFFF) % 1000]
+    return _header(memoryview(data), 0)[1]

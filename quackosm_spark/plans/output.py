@@ -229,7 +229,8 @@ def spatial_sort(
     coalesces small outputs to one).
 
     ``algorithm="str"``: Sort-Tile-Recursive slab packing — range-partition
-    on centroid x (vertical slabs), order by centroid y within each slab.
+    on centroid x (vertical slabs), order by centroid y, then x, within each
+    slab.
     ``repartitionByRange(x) + sortWithinPartitions(y)`` IS the STR recursion
     expressed in Spark primitives: the range partitioner computes the x
     slab boundaries from a sample, each output file is one slab.
@@ -241,14 +242,16 @@ def spatial_sort(
     cy = (bounds["ymin"] + bounds["ymax"]) / 2.0
     keyed = with_bounds(features)
     if algorithm == "str":
-        range_key, sort_key = "__cx", "__cy"
-        keyed = keyed.withColumns({range_key: cx, sort_key: cy})
+        # features on one row of a grid share their y: x orders them, so the
+        # order does not depend on the order the rows arrive in
+        range_key, sort_keys = "__cx", ["__cy", "__cx"]
+        keyed = keyed.withColumns({"__cx": cx, "__cy": cy})
     else:
         if extent is None:
             from quackosm_spark.sinks.geoparquet import collect_geo_stats
 
             extent = collect_geo_stats(features)[1]
-        range_key = sort_key = "__hilbert"
+        range_key, sort_keys = "__hilbert", ["__hilbert"]
         keyed = with_hilbert_key(keyed, cx, cy, extent, range_key)
     keyed = keyed.drop(BOUNDS_COLUMN)
     ranged = (
@@ -256,7 +259,7 @@ def spatial_sort(
         if num_partitions
         else keyed.repartitionByRange(range_key)
     )
-    return ranged.sortWithinPartitions(sort_key).drop(range_key, sort_key)
+    return ranged.sortWithinPartitions(*sort_keys).drop(range_key, *sort_keys)
 
 
 def _hilbert_steps() -> tuple[list[int], list[int]]:

@@ -9,10 +9,16 @@ Reference lifecycle (quackosm/pbf_file_reader.py:1148-1292):
 
 Differences by design (not omissions):
 
-- No intermediate parquet materialization: the reference spills ~30 named
-  relations to disk between stages as its out-of-core strategy
-  (pbf_file_reader.py:1527-2168); Spark's shuffle + AQE covers that. Where
-  the DAG forks (the prefilter outputs feed four consumers) we cache.
+- No id bookkeeping. The reference stages ~30 named id relations through
+  parquet between DuckDB statements (pbf_file_reader.py:1527-2168). Here the
+  prefilter (C1) is a row predicate per kind, and the geometry filter (C3)
+  an ``inside`` flag per node. C4 is fused into the joins that build the
+  geometry: J4 (way refs ⋈ node points) counts the matched refs, so a way is
+  valid iff it matched all of them, and C9's member join drops a relation
+  with a member way that did not resolve. Tags ride with their rows.
+- Two fork-point caches: the elements, which every branch scans, and the
+  assembled way lines, which the way features and the relation members
+  both read.
 - No memory ladders / watchdogs / group batching (reference
   ROWS_PER_GROUP_MEMORY_CONFIG): AQE + shuffle spill replace them.
 - The per-relation ring assembly (C9) runs as one ``applyInPandas`` over
@@ -21,8 +27,8 @@ Differences by design (not omissions):
 
 Scale notes: the one big shuffle is way-refs ⋈ node-points (J4) on node id —
 high-cardinality key, broadcast-ineligible at 100 TB, handled by sort-merge
-join + AQE skew splitting. ID-set semi joins stay as ``left_semi`` so AQE can
-broadcast the small side when a selective filter shrinks it.
+join + AQE skew splitting. The required member way ids are a small side, so
+AQE can broadcast them when the relations are few.
 """
 
 from __future__ import annotations
@@ -34,14 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from quackosm_spark.constants import COORDINATE_PRECISION, FEATURES_INDEX
 from quackosm_spark.filters.geometry import (
@@ -129,8 +128,12 @@ def _ids_filter(filter_osm_ids: Sequence[str], kind: str) -> Column:
     return F.col("id").isin(ids)
 
 
+def _non_empty(tags: str) -> Column:
+    return F.col(tags).isNotNull() & (F.size(F.map_keys(tags)) > 0)
+
+
 # --------------------------------------------------------------------------
-# The staged plan
+# The plan
 # --------------------------------------------------------------------------
 
 def build_features(
@@ -146,50 +149,51 @@ def build_features(
     opts = options or PbfPipelineOptions()
     validate_geometry_filter(opts.geometry_filter)
 
-    # The prefilter outputs feed four consumers (C6/C7/C8/C9) and the elements
-    # scan feeds every branch — persist at the fork points so the PBF is
-    # decoded once, mirroring the reference's stage materialization
-    # (pbf_file_reader.py:1527-2168) without its disk round-trips. At cluster
-    # scale swap MEMORY_AND_DISK for DISK_ONLY or a checkpoint dir.
+    # every branch scans the elements, so they are decoded once; at cluster
+    # scale swap MEMORY_AND_DISK for DISK_ONLY or a checkpoint dir
     elements = persist(elements)
-    nodes, ways, relations = split_elements(elements)
-
-    # ---- wildcard key expansion (P4) needs one data pass --------------------
     tags_filter = expand_wildcard_keys(elements, opts.tags_filter)
     merged_filter = merge_osm_tags_filter(tags_filter) if tags_filter is not None else None
+    tag_clause = (
+        compile_tags_filter(merged_filter, "raw_tags") if merged_filter else F.lit(True)
+    )
 
-    has_tags = F.col("tags").isNotNull() & (F.size(F.map_keys("tags")) > 0)
-    tag_clause = compile_tags_filter(merged_filter) if merged_filter else F.lit(True)
-    stripped = strip_metadata_tags("tags") if opts.ignore_metadata_tags else F.col("tags")
-
-    # ---- C1: per-kind filtered ids ------------------------------------------
-    # Expressed as per-kind row predicates, NOT a materialized id set + semi
-    # joins (the reference's parquet-staged shape, pbf_file_reader.py:
-    # 1582-1651): Catalyst pushes a predicate into the kind-split scans for
-    # free, while an id-set semi join would cost a shuffle per kind.
-    def _kind_filtered(kind_df: DataFrame, kind: str) -> DataFrame:
-        filtered = kind_df.where(
-            has_tags & tag_clause & _ids_filter(opts.filter_osm_ids, kind)
-        )
+    # ---- C1: the prefilter is a row predicate per kind, not an id set ----------
+    # Each kind keeps its raw map as ``raw_tags`` (the tag clause and the
+    # polygon decision read it) and its metadata-stripped map as ``tags`` (the
+    # custom SQL and the output read it, reference pbf_file_reader.py:1585-1605).
+    def _marked(kind_df: DataFrame, kind: str) -> DataFrame:
+        marked = kind_df.withColumnRenamed("tags", "raw_tags").withColumns({
+            "tags": strip_metadata_tags("raw_tags") if opts.ignore_metadata_tags
+            else F.col("raw_tags"),
+            "filtered": _non_empty("raw_tags") & tag_clause
+            & _ids_filter(opts.filter_osm_ids, kind),
+        })
         if opts.custom_sql_filter:
-            # custom SQL evaluates over the metadata-stripped map, like the
-            # reference (pbf_file_reader.py:1585-1605)
-            filtered = (
-                filtered.withColumn("tags", stripped)
-                .where(has_tags)
-                .where(F.expr(opts.custom_sql_filter))
+            marked = marked.withColumn(
+                "filtered",
+                F.col("filtered") & _non_empty("tags")
+                & F.coalesce(F.expr(opts.custom_sql_filter), F.lit(False)),
             )
-        return filtered
+        return marked
 
-    relations_filtered = _kind_filtered(relations, "relation")
-    nodes_filtered_ids = _kind_filtered(nodes, "node").select("id")
-    ways_filtered_ids = _kind_filtered(ways, "way").select("id")
+    nodes, ways, relations = (
+        _marked(df, kind)
+        for df, kind in zip(split_elements(elements), ("node", "way", "relation"))
+    )
 
-    # ---- C2: transitive closure of refs -------------------------------------
-    # relations → member ways (only way-type members are used,
-    # pbf_file_reader.py:1665-1674)
-    relations_unnested = (
-        relations_filtered
+    # ---- C3: a node is inside the geometry filter (on its raw lat/lon) ---------
+    geometry = opts.geometry_filter
+    nodes = nodes.withColumn(
+        "inside",
+        bbox_prefilter(geometry) & compile_point_in_polygon(geometry)
+        if geometry is not None else F.lit(True),
+    )
+
+    # ---- C2: ref closure — filtered relations → their way members ------------
+    # (only way-type members are used, pbf_file_reader.py:1665-1674)
+    members = (
+        relations.where("filtered")
         .select(
             "id",
             F.posexplode(
@@ -200,152 +204,81 @@ def build_features(
                 )
             ).alias("ref_idx", "m"),
         )
-        .select(
-            "id",
-            F.col("m.ref").alias("ref"),
-            F.col("m.ref_type").alias("ref_type"),
-            F.col("m.ref_role").alias("ref_role"),
-            "ref_idx",
-        )
-        .where(F.col("ref_type") == "way")
-        .drop("ref_type")
+        .where(F.col("m.ref_type") == "way")
+        .select("id", F.col("m.ref").alias("ref"), F.col("m.ref_role").alias("ref_role"),
+                "ref_idx")
+    )
+    required = members.select("ref").distinct()
+    ways_kept = (
+        ways.join(required, ways["id"] == required["ref"], "left")
+        .where(F.col("filtered") | F.col("ref").isNotNull())
+        .select("id", "refs", "raw_tags", "tags", "filtered")
     )
 
-    ways_required_ids = relations_unnested.select(F.col("ref").alias("id")).distinct()
-    ways_filtered_required_ids = ways_filtered_ids.union(ways_required_ids).distinct()
-
-    ways_unnested = persist(
-        ways.join(ways_filtered_required_ids, "id", "left_semi")
-        .select("id", F.posexplode("refs").alias("ref_idx", "ref"))
+    # ---- J4 + C4: way refs ⋈ node points also decides way validity -----------
+    # A way is valid iff every ref matched a node point. A closed way's
+    # repeated first ref matches twice and counts twice, like its size. Ways
+    # kept only as relation members are assembled whether they intersect the
+    # geometry filter or not, and their nodes keep their coordinates outside it
+    # (pbf_file_reader.py:1995-2014).
+    points = nodes.select(
+        F.col("id").alias("ref"),
+        F.round("lon", COORDINATE_PRECISION).alias("x"),
+        F.round("lat", COORDINATE_PRECISION).alias("y"),
+        "inside",
     )
-
-    nodes_required_ids = ways_unnested.select(F.col("ref").alias("id")).distinct()
-    nodes_filtered_required_ids = nodes_filtered_ids.union(nodes_required_ids).distinct()
-
-    # ---- C3: geometry filter -------------------------------------------------
-    node_points_all = nodes.select("id", "lat", "lon")
-    candidate_points = node_points_all.join(nodes_filtered_required_ids, "id", "left_semi")
-
-    if opts.geometry_filter is not None:
-        in_bbox = candidate_points.where(bbox_prefilter(opts.geometry_filter))
-        intersected_node_ids = (
-            in_bbox.where(compile_point_in_polygon(opts.geometry_filter))
-            .select("id")
+    lines = (
+        ways_kept.select("id", F.posexplode("refs").alias("ref_idx", "ref"))
+        .join(points, "ref")
+        .groupBy("id")
+        .agg(
+            # A2 ordered list-aggregation (reference pbf_file_reader.py:
+            # 3174-3193): sort_array orders the points by ref_idx
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("ref_idx", "x", "y"))),
+                lambda s: F.struct(s["x"].alias("x"), s["y"].alias("y")),
+            ).alias("linestring"),
+            F.count(F.lit(1)).alias("matched"),
+            F.max("inside").alias("intersects"),
         )
-        nodes_filtered_intersected_ids = nodes_filtered_ids.join(
-            intersected_node_ids, "id", "left_semi"
-        )
-        ways_intersected_ids = (
-            ways_unnested.join(
-                intersected_node_ids.withColumnRenamed("id", "ref"), "ref", "left_semi"
-            )
-            .select("id")
-            .distinct()
-        )
-        ways_filtered_intersected_ids = ways_filtered_ids.join(
-            ways_intersected_ids, "id", "left_semi"
-        )
-        relations_intersected_ids = (
-            relations_unnested.join(
-                ways_intersected_ids.withColumnRenamed("id", "ref"), "ref", "left_semi"
-            )
-            .select("id")
-            .distinct()
-        )
-        relations_unnested = relations_unnested.join(
-            relations_intersected_ids, "id", "left_semi"
-        )
-        ways_required_ids = relations_unnested.select(F.col("ref").alias("id")).distinct()
-        ways_filtered_required_ids = ways_filtered_intersected_ids.union(
-            ways_required_ids
-        ).distinct()
-        ways_unnested = ways_unnested.join(ways_filtered_required_ids, "id", "left_semi")
-        nodes_filtered_ids = nodes_filtered_intersected_ids
-        ways_filtered_ids = ways_filtered_intersected_ids
-
-    # final node point set: filtered(∩intersected) nodes ∪ refs of kept ways —
-    # required nodes keep their coordinates even outside the filter polygon
-    # (pbf_file_reader.py:1995-2014)
-    final_node_ids = nodes_filtered_ids.union(
-        ways_unnested.select(F.col("ref").alias("id")).distinct()
-    ).distinct()
-    node_points = persist(node_points_all.join(final_node_ids, "id", "left_semi"))
-
-    # ---- C4: referential validity (J2 applied twice) -------------------------
-    ways_valid_ids = _valid_ids_by_refs(ways_unnested, node_points.select("id"))
-    ways_required_valid_ids = ways_required_ids.join(ways_valid_ids, "id", "left_semi")
-    ways_filtered_valid_ids = ways_filtered_ids.join(ways_valid_ids, "id", "left_semi")
-
-    relations_valid_ids = _valid_ids_by_refs(
-        relations_unnested, ways_required_valid_ids
     )
-    relations_unnested_valid = relations_unnested.join(
-        relations_valid_ids, "id", "left_semi"
+    # read by the way features and by the relation members
+    way_lines = persist(
+        ways_kept.join(lines, "id")
+        .where(F.col("matched") == F.size("refs"))
+        .select("id", "filtered", "tags", "raw_tags", "linestring", "intersects")
     )
-
-    # ---- tags read (pbf_file_reader.py:2068-2168) ----------------------------
-    kept_ids = (
-        nodes_filtered_ids.select(F.lit("node").alias("kind"), "id")
-        .union(ways_filtered_valid_ids.select(F.lit("way").alias("kind"), "id"))
-        .union(relations_valid_ids.select(F.lit("relation").alias("kind"), "id"))
-    )
-    elements_tags = (
-        elements.where(has_tags)
-        .join(kept_ids, ["kind", "id"], "left_semi")
-        .select(
-            "kind",
-            "id",
-            stripped.alias("tags"),
-            F.when(F.col("kind") == "way", F.col("tags")).alias("raw_tags"),
-        )
-        .where(F.col("tags").isNotNull() & (F.size(F.map_keys("tags")) > 0))
-    )
-    nodes_tags = elements_tags.where(F.col("kind") == "node").select("id", "tags")
-    ways_tags = elements_tags.where(F.col("kind") == "way").select("id", "tags", "raw_tags")
-    relations_tags = elements_tags.where(F.col("kind") == "relation").select("id", "tags")
 
     # ---- C6: node → Point -----------------------------------------------------
-    node_features = (
-        nodes_tags.join(node_points, "id")
-        .select(
-            F.concat(F.lit("node/"), F.col("id")).alias(FEATURES_INDEX),
-            "tags",
-            _point_wkb(
-                F.round(F.col("lon"), COORDINATE_PRECISION),
-                F.round(F.col("lat"), COORDINATE_PRECISION),
-            ).alias("geometry"),
-        )
+    node_features = nodes.where(
+        F.col("filtered") & F.col("inside") & _non_empty("tags")
+    ).select(
+        F.concat(F.lit("node/"), F.col("id")).alias(FEATURES_INDEX),
+        "tags",
+        _point_wkb(
+            F.round(F.col("lon"), COORDINATE_PRECISION),
+            F.round(F.col("lat"), COORDINATE_PRECISION),
+        ).alias("geometry"),
     )
 
-    # ---- C7: way → linestring (the big shuffle join J4) ----------------------
-    way_linestrings = persist(_assemble_way_linestrings(ways_unnested, node_points))
-    filtered_way_linestrings = way_linestrings.join(
-        ways_filtered_valid_ids, "id", "left_semi"
-    )
-    required_way_linestrings = way_linestrings.join(
-        ways_required_valid_ids, "id", "left_semi"
-    )
-
-    # ---- C8: way polygonization ----------------------------------------------
+    # ---- C7 + C8: way → LineString or Polygon ----------------------------------
     polygon_cfg = opts.osm_way_polygon_features_config or default_polygon_features_config()
-    way_features = _ways_to_features(filtered_way_linestrings, ways_tags, polygon_cfg)
+    way_features = _ways_to_features(
+        way_lines.where(F.col("filtered") & F.col("intersects") & _non_empty("tags")),
+        polygon_cfg,
+    )
 
-    # ---- C9: relation assembly ------------------------------------------------
+    # ---- C9 (+ C4 for relations): relation assembly over the member join -----
     relation_features = _relations_to_features(
-        relations_unnested_valid, required_way_linestrings, relations_tags
+        members.join(
+            way_lines.select(F.col("id").alias("ref"), "linestring", "intersects"),
+            "ref",
+            "left",
+        ),
+        relations.where(F.col("filtered") & _non_empty("tags")).select("id", "tags"),
     )
 
     return node_features.unionByName(way_features).unionByName(relation_features)
-
-
-def _valid_ids_by_refs(unnested: DataFrame, valid_sub_ids: DataFrame) -> DataFrame:
-    """An element is valid iff NO ref is unmatched — two anti joins
-    (reference `_calculate_element_valid_ids_based_on_refs_with_duckdb`,
-    pbf_file_reader.py:2455-2481)."""
-    unmatched = unnested.join(
-        valid_sub_ids.withColumnRenamed("id", "ref"), "ref", "left_anti"
-    ).select("id")
-    return unnested.select("id").distinct().join(unmatched, "id", "left_anti")
 
 
 def _point_wkb(x: Column, y: Column) -> Column:
@@ -368,33 +301,6 @@ def _point_wkb_udf(x: pd.Series, y: pd.Series) -> pd.Series:
     return pd.Series([raw[i * stride : (i + 1) * stride] for i in range(n)])
 
 
-def _assemble_way_linestrings(ways_unnested: DataFrame, node_points: DataFrame) -> DataFrame:
-    """(way id, ref, ref_idx) ⋈ node points → ordered coordinate arrays.
-
-    A2 ordered list-aggregation (reference pbf_file_reader.py:3174-3193):
-    ``sort_array(collect_list(struct(ref_idx, point)))`` guarantees
-    deterministic ordering by ref_idx. Coordinates are rounded to 7 decimals
-    *before* geometry construction (§1.2 canonical rounding).
-    """
-    joined = ways_unnested.join(
-        node_points.select(
-            F.col("id").alias("ref"),
-            F.round("lon", COORDINATE_PRECISION).alias("x"),
-            F.round("lat", COORDINATE_PRECISION).alias("y"),
-        ),
-        "ref",
-    )
-    return (
-        joined.groupBy("id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("ref_idx", "x", "y"))),
-                lambda s: F.struct(s["x"].alias("x"), s["y"].alias("y")),
-            ).alias("linestring")
-        )
-    )
-
-
 def _polygon_tag_clause(raw_tags: Column, cfg: dict[str, Any]) -> Column:
     """C8 tag-side decision (reference pbf_file_reader.py:3205-3231):
     area=yes OR key∈all OR allowlist value match OR denylist value non-match."""
@@ -413,11 +319,6 @@ def _polygon_tag_clause(raw_tags: Column, cfg: dict[str, Any]) -> Column:
     for c in clauses[1:]:
         out = out | c
     return out
-
-
-_LINESTRING_SCHEMA = ArrayType(
-    StructType([StructField("x", DoubleType()), StructField("y", DoubleType())])
-)
 
 
 _LS_HEADER = b"\x01\x02\x00\x00\x00"  # little-endian LineString
@@ -494,28 +395,26 @@ def _way_geometry_udf(
     return pd.Series(out)
 
 
-def _ways_to_features(
-    way_linestrings: DataFrame, ways_tags: DataFrame, polygon_cfg: dict[str, Any]
-) -> DataFrame:
+def _ways_to_features(way_lines: DataFrame, polygon_cfg: dict[str, Any]) -> DataFrame:
     tag_ok = (
         F.col("raw_tags").isNotNull()
         & ~(F.col("raw_tags")["area"] == "no").eqNullSafe(F.lit(True))
         & _polygon_tag_clause(F.col("raw_tags"), polygon_cfg)
     )
-    return (
-        ways_tags.join(way_linestrings, "id")
-        .select(
-            F.concat(F.lit("way/"), F.col("id")).alias(FEATURES_INDEX),
-            "tags",
-            _way_geometry_udf(
-                F.col("linestring.x"), F.col("linestring.y"), tag_ok
-            ).alias("geometry"),
-        )
+    return way_lines.select(
+        F.concat(F.lit("way/"), F.col("id")).alias(FEATURES_INDEX),
+        "tags",
+        _way_geometry_udf(
+            F.col("linestring.x"), F.col("linestring.y"), tag_ok
+        ).alias("geometry"),
     )
 
 
 _RELATION_GEOM_SCHEMA = StructType(
     [StructField("id", LongType()), StructField("geometry", BinaryType())]
+)
+_NO_RELATION = pd.DataFrame(
+    {"id": pd.Series([], dtype="int64"), "geometry": pd.Series([], dtype=object)}
 )
 
 
@@ -528,7 +427,11 @@ def _assemble_relation(pdf: pd.DataFrame) -> pd.DataFrame:
     linemerge member linestrings per role → drop parts with <4 distinct
     points → relation valid iff ALL parts closed → inner/outer polygons →
     holes assigned by containment → union of outer parts.
+
+    Members are merged in ``ref_idx`` order, so a ring's start vertex does not
+    depend on the order the rows arrive in.
     """
+    pdf = pdf.sort_values("ref_idx", kind="stable")
     rel_id = int(pdf["id"].iloc[0])
     roles = ["outer" if r is None else str(r) for r in pdf["ref_role"]]
     if not any(r == "outer" for r in roles):
@@ -544,12 +447,10 @@ def _assemble_relation(pdf: pd.DataFrame) -> pd.DataFrame:
             if len(remove_repeated_points(merged)) >= 4:
                 parts.append((role, merged))
     if not parts:
-        return pd.DataFrame({"id": pd.Series([], dtype="int64"),
-                             "geometry": pd.Series([], dtype=object)})
+        return _NO_RELATION
     # relation valid iff every ring (any role) is closed
     if not all(is_closed(ring) for _, ring in parts):
-        return pd.DataFrame({"id": pd.Series([], dtype="int64"),
-                             "geometry": pd.Series([], dtype=object)})
+        return _NO_RELATION
 
     from quackosm_spark.geometry.ops import signed_area
     from quackosm_spark.geometry.repair import (
@@ -717,8 +618,7 @@ def _assemble_relation(pdf: pd.DataFrame) -> pd.DataFrame:
                 polygons.append([sh, *own])
         polygons.extend([island] for island in island_parts)
     if not polygons:
-        return pd.DataFrame({"id": pd.Series([], dtype="int64"),
-                             "geometry": pd.Series([], dtype=object)})
+        return _NO_RELATION
     if len(polygons) == 1:
         geom = {"type": "Polygon", "coordinates": polygons[0]}
     else:
@@ -737,16 +637,22 @@ def _assemble_relation(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({"id": [rel_id], "geometry": [wkb.dumps(geom)]})
 
 
-def _relations_to_features(
-    relations_unnested_valid: DataFrame,
-    required_way_linestrings: DataFrame,
-    relations_tags: DataFrame,
-) -> DataFrame:
-    members = relations_unnested_valid.join(
-        required_way_linestrings.withColumnRenamed("id", "ref"), "ref"
-    ).select("id", "ref_role", "ref_idx", "linestring")
-    geoms = members.groupBy("id").applyInPandas(
-        _assemble_relation, schema=_RELATION_GEOM_SCHEMA
+def _assemble_resolved_relation(pdf: pd.DataFrame) -> pd.DataFrame:
+    """C9 over the member join. A relation is dropped when a way member did
+    not resolve to a valid way (a null linestring: the way is missing, has
+    fewer than two refs or a ref without a node, reference
+    pbf_file_reader.py:2455-2481), or when no way member intersects the
+    geometry filter."""
+    if pdf["linestring"].isna().any() or not pdf["intersects"].any():
+        return _NO_RELATION
+    return _assemble_relation(pdf)
+
+
+def _relations_to_features(members: DataFrame, relations_tags: DataFrame) -> DataFrame:
+    geoms = members.select(
+        "id", "ref_role", "ref_idx", "linestring", "intersects"
+    ).groupBy("id").applyInPandas(
+        _assemble_resolved_relation, schema=_RELATION_GEOM_SCHEMA
     )
     return geoms.join(relations_tags, "id").select(
         F.concat(F.lit("relation/"), F.col("id")).alias(FEATURES_INDEX),

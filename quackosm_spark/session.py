@@ -44,10 +44,10 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
 
-    # Python worker processes (data source + UDF workers) don't inherit the
+    # Python worker processes (PBF decode + UDF workers) don't inherit the
     # driver's sys.path mutations — without this, running from any directory
     # other than the repo root fails with ModuleNotFoundError inside the
-    # osmpbf data source. On a real cluster the package is pip-installed on
+    # PBF decode. On a real cluster the package is pip-installed on
     # executors instead.
     pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     existing = os.environ.get("PYTHONPATH", "")

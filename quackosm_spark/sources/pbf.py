@@ -1,4 +1,5 @@
-"""``osmpbf`` — a PySpark Python DataSource for OpenStreetMap PBF files.
+"""Reading OpenStreetMap PBF files into Spark: ``read_osm_pbf`` and the
+``osmpbf`` Python DataSource.
 
 The Spark replacement for the reference's scan primitive (DuckDB-spatial
 ``ST_READOSM``, reference quackosm/pbf_file_reader.py:1199). One output row
@@ -8,14 +9,24 @@ per OSM element with the schema of SURVEY §1.1:
     ref_types ARRAY<STRING>, ref_roles ARRAY<STRING>, lat DOUBLE, lon DOUBLE
 
 Scale design: a PBF file is a sequence of independently decodable blobs, so
-partition planning is a driver-side header-only scan (`index_blobs`) that
+split planning is a driver-side header-only scan (`plan_splits`) that
 groups consecutive OSMData blobs into ~`partition_bytes` (compressed) splits.
 Decoding runs in executor tasks and emits Arrow RecordBatches, so rows never
 pass through Python object conversion row-at-a-time. A 100 TB corpus of PBF
 files parallelizes to one task per blob group per file.
 
+``read_osm_pbf`` (what the conversion uses) plans the splits in the
+driver's own Python and decodes them with ``mapInArrow``. The DataSource
+decodes the same splits but plans them in Python planner processes, and
+registering it scans the JVM's data source providers. In a fresh JVM,
+reading and counting a 14k-element file takes 7.5–8.9 s through the
+DataSource and 3.6–3.8 s through ``read_osm_pbf`` (4 cores); warm, both
+take 0.4–0.5 s.
+
 Usage::
 
+    df = read_osm_pbf(spark, "/path/to/file.osm.pbf")
+    # or through the DataSource:
     register_pbf_source(spark)
     df = spark.read.format("osmpbf").load("/path/to/file.osm.pbf")
     # or several files: .option("paths", "a.pbf,b.pbf")
@@ -26,7 +37,7 @@ from __future__ import annotations
 import glob as _glob
 import os
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Iterable, Iterator, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -98,47 +109,66 @@ class OsmPbfReader(DataSourceReader):
         path = options.get("path") or options.get("paths")
         if not path:
             raise ValueError("osmpbf source requires a path (load(path) or option('paths'))")
-        self.paths: list[str] = []
-        for p in str(path).split(","):
-            p = p.strip()
-            matches = sorted(_glob.glob(p)) if any(ch in p for ch in "*?[") else [p]
-            self.paths.extend(matches)
+        self.paths = _expand_paths(p.strip() for p in str(path).split(","))
         self.partition_bytes = int(
             options.get("partitionbytes", options.get("partitionBytes", DEFAULT_PARTITION_BYTES))
         )
 
     def partitions(self) -> Sequence[PbfBlobPartition]:
-        parts: list[PbfBlobPartition] = []
-        for path in self.paths:
-            if not os.path.exists(path):
-                raise FileNotFoundError(path)
-            pbf_decode.check_header_features(path)
-            refs = [r for r in pbf_decode.index_blobs(path) if r.kind == "OSMData"]
-            bucket: list[tuple[int, int]] = []
-            bucket_bytes = 0
-            for r in refs:
-                bucket.append((r.offset, r.size))
-                bucket_bytes += r.size
-                if bucket_bytes >= self.partition_bytes:
-                    parts.append(PbfBlobPartition(path, tuple(bucket)))
-                    bucket, bucket_bytes = [], 0
-            if bucket:
-                parts.append(PbfBlobPartition(path, tuple(bucket)))
-        if not parts:
-            # header-only PBF (zero OSMData blobs): the DataSource API
-            # requires ≥1 partition — emit one that decodes to nothing so
-            # the result is an empty DataFrame with the right schema
-            parts.append(PbfBlobPartition(self.paths[0], ()))
-        return parts
+        return plan_splits(self.paths, self.partition_bytes)
 
     def read(self, partition: PbfBlobPartition) -> Iterator[pa.RecordBatch]:
-        with open(partition.path, "rb") as f:
-            for offset, size in partition.blobs:
-                payload = pbf_decode.read_blob_payload(
-                    f, pbf_decode.BlobRef(offset=offset, size=size, kind="OSMData")
-                )
-                for chunk in pbf_decode.decode_primitive_block(payload):
-                    yield _chunk_to_record_batch(chunk)
+        return decode_split(partition)
+
+
+def _expand_paths(paths: Iterable[str]) -> list[str]:
+    """Paths with glob characters expand to their sorted matches."""
+    out: list[str] = []
+    for p in paths:
+        out.extend(sorted(_glob.glob(p)) if any(ch in p for ch in "*?[") else [p])
+    return out
+
+
+def plan_splits(paths: Sequence[str], partition_bytes: int) -> list[PbfBlobPartition]:
+    """Group each file's consecutive OSMData blobs into splits of about
+    ``partition_bytes`` compressed bytes; one task decodes one split."""
+    parts: list[PbfBlobPartition] = []
+    for path in paths:
+        if not os.path.exists(path):
+            # decoding this split raises FileNotFoundError, so a read stays
+            # lazy and fails at its first action
+            parts.append(PbfBlobPartition(path, ()))
+            continue
+        pbf_decode.check_header_features(path)
+        refs = [r for r in pbf_decode.index_blobs(path) if r.kind == "OSMData"]
+        bucket: list[tuple[int, int]] = []
+        bucket_bytes = 0
+        for r in refs:
+            bucket.append((r.offset, r.size))
+            bucket_bytes += r.size
+            if bucket_bytes >= partition_bytes:
+                parts.append(PbfBlobPartition(path, tuple(bucket)))
+                bucket, bucket_bytes = [], 0
+        if bucket:
+            parts.append(PbfBlobPartition(path, tuple(bucket)))
+    if not parts:
+        # header-only PBF (zero OSMData blobs): a read needs at least one
+        # split, so emit one that decodes to nothing and the result is an
+        # empty DataFrame with the right schema
+        parts.append(PbfBlobPartition(paths[0], ()))
+    return parts
+
+
+def decode_split(split: PbfBlobPartition) -> Iterator[pa.RecordBatch]:
+    """The Arrow batches of one split's blobs, in file order (the file is
+    opened even for a split without blobs)."""
+    with open(split.path, "rb") as f:
+        for offset, size in split.blobs:
+            payload = pbf_decode.read_blob_payload(
+                f, pbf_decode.BlobRef(offset=offset, size=size, kind="OSMData")
+            )
+            for chunk in pbf_decode.decode_primitive_block(payload):
+                yield _chunk_to_record_batch(chunk)
 
 
 def _chunk_to_record_batch(chunk: dict) -> pa.RecordBatch:
@@ -177,10 +207,29 @@ def register_pbf_source(spark: SparkSession) -> None:
     spark.dataSource.register(OsmPbfDataSource)
 
 
+#: one row per split: the file and its (offset, size) blob payloads
+_SPLIT_SCHEMA = "path STRING, blobs ARRAY<ARRAY<BIGINT>>"
+
+
+def _decode_split_rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """``mapInArrow`` body: decode every split row of the task's batches."""
+    for batch in batches:
+        for path, blobs in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+            yield from decode_split(PbfBlobPartition(path, tuple(map(tuple, blobs))))
+
+
 def read_osm_pbf(spark: SparkSession, *paths: str, partition_bytes: int | None = None) -> DataFrame:
-    """Read one or more ``.osm.pbf`` files as the raw elements DataFrame."""
-    register_pbf_source(spark)
-    reader = spark.read.format("osmpbf")
-    if partition_bytes:
-        reader = reader.option("partitionBytes", str(partition_bytes))
-    return reader.load(",".join(paths))
+    """Read one or more ``.osm.pbf`` files as the raw elements DataFrame.
+
+    The splits are planned here, on the driver, and decoded one per task by
+    ``mapInArrow``. They travel as the rows of an RDD, not of a
+    ``spark.range``, so the optimizer sees the decoded size as unknown, as
+    it does for the DataSource, and never plans a broadcast of the elements
+    (a range's estimate is a few bytes per split)."""
+    splits = plan_splits(_expand_paths(paths), partition_bytes or DEFAULT_PARTITION_BYTES)
+    rows = spark.sparkContext.parallelize(
+        [(s.path, [list(b) for b in s.blobs]) for s in splits], len(splits)
+    )
+    return spark.createDataFrame(rows, _SPLIT_SCHEMA).mapInArrow(
+        _decode_split_rows, ELEMENTS_SCHEMA
+    )

@@ -225,3 +225,38 @@ def test_conversion_keeps_the_callers_cached_frames(clean_cache, grid_pbf, tmp_p
     assert elements.storageLevel != StorageLevel.NONE
     assert numbers.storageLevel != StorageLevel.NONE
     assert _cached_rdd_count(spark) == 2
+
+
+def _cache_builders(spark, frame) -> set[int]:
+    """Identities of the cached relations a frame's plan reads."""
+    leaves = frame._jdf.queryExecution().withCachedData().collectLeaves()
+    system = spark.sparkContext._jvm.java.lang.System
+    return {
+        system.identityHashCode(leaves.apply(i).cacheBuilder())
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "InMemoryRelation"
+    }
+
+
+def test_wildcard_expansion_and_features_share_one_decode(clean_cache, grid_pbf, monkeypatch):
+    """The distinct-keys job of the wildcard expansion and the features read
+    the same cached elements, so the file is decoded once."""
+    spark = clean_cache
+    import quackosm_spark.filters.tags as tags_mod
+    from quackosm_spark.functions import convert_pbf_to_dataframe
+
+    expanded = []
+    expand = tags_mod.expand_wildcard_keys
+
+    def recording(elements, tags_filter, *args, **kwargs):
+        expanded.append(_cache_builders(spark, elements))  # as the job plans it
+        return expand(elements, tags_filter, *args, **kwargs)
+
+    monkeypatch.setattr(tags_mod, "expand_wildcard_keys", recording)
+    # compact tags: no output cache hides the features' own plan
+    features = convert_pbf_to_dataframe(
+        spark, grid_pbf, tags_filter={"amen*": True}, explode_tags=False
+    )
+    assert features.count() == 1600 // 7 + 1
+    assert len(expanded[0]) == 1
+    assert expanded[0] <= _cache_builders(spark, features)

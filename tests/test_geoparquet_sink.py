@@ -322,3 +322,19 @@ def test_failed_conversion_is_not_a_cache_hit(spark, tmp_path, grid_pbf, monkeyp
 
     again = convert_pbf_to_parquet(spark, grid_pbf, result_file_path=out, save_as_wkt=True)
     assert sum(pq.ParquetFile(p).metadata.num_rows for p in _parts(again)) == 1600 // 7 + 1 + 60
+
+
+def test_unsorted_conversions_write_a_part_layout_set_by_the_rows(spark, tmp_path, grid_pbf):
+    """Unsorted output is rebalanced before the write, so its parts follow
+    the row count, not the partitioning the feature plan left behind."""
+    from quackosm_spark.functions import convert_pbf_to_parquet
+
+    rows, k = 1600 // 7 + 1 + 60, 50
+    for run in range(2):
+        out = convert_pbf_to_parquet(
+            spark, grid_pbf, result_file_path=tmp_path / f"out{run}.parquet",
+            sort_result=False, max_records_per_file=k,
+        )
+        sizes = [pq.ParquetFile(p).metadata.num_rows for p in _parts(out)]
+        assert sum(sizes) == rows
+        assert len(sizes) == -(-rows // k), sizes

@@ -129,3 +129,41 @@ def test_alternate_blob_compressions_roundtrip(spark, tmp_path, compression):
     other = sorted(map(tuple, read_osm_pbf(spark, alt).collect()))
     assert other == base
     assert len(base) == 555
+
+
+def test_read_matches_datasource(spark, synthetic_pbf):
+    """``read_osm_pbf`` and ``spark.read.format("osmpbf")`` decode the same
+    splits: the same partitions, rows and per-partition row order."""
+    from quackosm_spark.sources.pbf import register_pbf_source
+
+    register_pbf_source(spark)
+    direct = read_osm_pbf(spark, synthetic_pbf, partition_bytes=1024)
+    source = (
+        spark.read.format("osmpbf").option("partitionBytes", "1024").load(synthetic_pbf)
+    )
+    assert direct.schema == source.schema
+    assert direct.rdd.getNumPartitions() == source.rdd.getNumPartitions()
+    assert direct.rdd.glom().collect() == source.rdd.glom().collect()
+
+
+def test_read_size_estimate_is_unknown(spark, synthetic_pbf):
+    """The optimizer sees the decoded size as unknown, as for a file of
+    unknown size, so no join over the elements is broadcast at planning."""
+    df = read_osm_pbf(spark, synthetic_pbf)
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    assert size > 2**60  # spark.sql.defaultSizeInBytes: Long.MaxValue
+
+
+def test_read_of_missing_file_fails_at_first_action(spark, tmp_path):
+    df = read_osm_pbf(spark, str(tmp_path / "missing.osm.pbf"))
+    assert df.columns == ["kind", "id", "tags", "refs", "ref_types", "ref_roles", "lat", "lon"]
+    with pytest.raises(Exception, match="FileNotFoundError"):
+        df.count()
+
+
+def test_read_of_header_only_file_is_empty(spark, tmp_path):
+    path = str(tmp_path / "empty.osm.pbf")
+    pbf_encode.write_pbf(path, [])
+    df = read_osm_pbf(spark, path)
+    assert df.rdd.getNumPartitions() == 1
+    assert df.count() == 0

@@ -982,3 +982,26 @@ class TestGateInvariances:
             base = R.make_valid_area(ring)
             for rot in self._rotations(ring):
                 assert R.make_valid_area(rot) == pytest.approx(base), rot
+
+
+def test_relation_assembly_ignores_member_order():
+    """The kernel merges members in ``ref_idx`` order, whatever order the
+    member rows arrive in."""
+    import pandas as pd
+
+    from quackosm_spark.plans.pipeline import _assemble_relation
+
+    halves = [
+        ("outer", [[0, 0], [4, 0], [4, 4]]),
+        ("outer", [[4, 4], [0, 4], [0, 0]]),
+        ("inner", [[1, 1], [2, 1], [2, 2], [1, 1]]),
+        ("outer", [[6, 0], [8, 0], [8, 2]]),
+        ("outer", [[8, 2], [6, 2], [6, 0]]),
+    ]
+    rows = [{"id": 7, "ref_role": role, "ref_idx": i,
+             "linestring": [{"x": float(x), "y": float(y)} for x, y in line]}
+            for i, (role, line) in enumerate(halves)]
+    want = _assemble_relation(pd.DataFrame(rows))["geometry"].iloc[0]
+    for order in ([4, 3, 2, 1, 0], [1, 0, 4, 2, 3], [3, 1, 4, 0, 2]):
+        got = _assemble_relation(pd.DataFrame([rows[i] for i in order]))
+        assert got["geometry"].iloc[0] == want
