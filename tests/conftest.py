@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import glob
 import sys
 from pathlib import Path
 
@@ -165,4 +166,21 @@ def grid_pbf(tmp_path_factory):
     return pbf_encode.write_pbf(path, els, elements_per_block=400)
 
 
-MONACO = "/root/reference/tests/test_files/monaco.osm.pbf"
+#: The reference checkout's test fixtures: real and hand-crafted PBFs that
+#: are not in this repository. Tests whose expected values are the reference
+#: engine's own output on one of these files carry ``needs_reference``.
+REFERENCE_TEST_FILES = "/root/reference/tests/test_files"
+MONACO = f"{REFERENCE_TEST_FILES}/monaco.osm.pbf"
+
+
+def needs_reference(path) -> pytest.MarkDecorator:
+    """Skip the marked test or parameter unless ``path`` (a file of the
+    reference checkout, or a glob pattern for one) exists. The test's
+    expected values come from the reference engine on that very file, so no
+    generated input stands in for it; wherever the file is present the test
+    runs unchanged."""
+    path = str(path)
+    return pytest.mark.skipif(
+        not glob.glob(path),
+        reason=f"needs {path} from the reference checkout, which is absent",
+    )

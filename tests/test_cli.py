@@ -8,7 +8,7 @@ import json
 import pytest
 
 from quackosm_spark import cli
-from tests.conftest import MONACO
+from tests.conftest import MONACO, needs_reference
 
 
 def test_geohash_decode_known_cells():
@@ -61,6 +61,7 @@ def test_conflicting_tags_filter_args(tmp_path):
         cli.parse_tags_filter(args)
 
 
+@needs_reference(MONACO)
 def test_cli_end_to_end(spark, tmp_path, capsys):
     out = cli.main(
         [
@@ -78,6 +79,7 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
     assert "amenity" in df.columns  # positive filter → exploded by default
 
 
+@needs_reference(MONACO)
 def test_cli_bbox_filter_end_to_end(spark, tmp_path):
     out = cli.main(
         [
@@ -122,6 +124,7 @@ def _write_index_parquet(tmp_path):
     return idx
 
 
+@needs_reference(MONACO)
 def test_cli_duckdb_export(tmp_path):
     import duckdb
 
@@ -139,6 +142,7 @@ def test_cli_duckdb_export(tmp_path):
         assert con.sql("SELECT count(*) FROM quackosm").fetchone()[0] == 23
 
 
+@needs_reference(MONACO)
 def test_cli_osm_extract_query(tmp_path):
     idx = _write_index_parquet(tmp_path)
     out = cli.main(
@@ -156,6 +160,7 @@ def test_cli_osm_extract_query(tmp_path):
     assert get_spark().read.parquet(str(out)).count() == 23
 
 
+@needs_reference(MONACO)
 def test_cli_geometry_driven(tmp_path):
     idx = _write_index_parquet(tmp_path)
     out = cli.main(

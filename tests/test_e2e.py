@@ -7,7 +7,8 @@ counts are regression values for the monaco fixture
 match the reference docstring geometries (quackosm/functions.py:180-240)
 coordinate-for-coordinate; the docstring *totals* (8154/5902) belong to a
 different, newer monaco extract downloaded by the reference's doctest
-conftest (quackosm/conftest.py:69-96), so they are not comparable."""
+conftest (quackosm/conftest.py:69-96), so they are not comparable. The
+monaco tests skip where the reference checkout is absent."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ from pyspark.sql import functions as F
 
 from quackosm_spark.functions import convert_pbf_to_dataframe, convert_pbf_to_parquet
 from quackosm_spark.geometry import model, wkb
-from tests.conftest import MONACO
+from tests.conftest import MONACO, needs_reference
 
 
 @pytest.fixture(scope="module")
@@ -24,6 +25,7 @@ def monaco_features(spark):
     return convert_pbf_to_dataframe(spark, MONACO).cache()
 
 
+@needs_reference(MONACO)
 def test_nofilter_feature_counts(monaco_features):
     by_kind = {
         r["k"]: r["count"]
@@ -34,6 +36,7 @@ def test_nofilter_feature_counts(monaco_features):
     assert by_kind == {"node": 3119, "way": 4774, "relation": 44}
 
 
+@needs_reference(MONACO)
 def test_docstring_parity_spot_checks(monaco_features):
     """Exact tag + geometry parity with reference docstring examples."""
     rows = {
@@ -53,6 +56,7 @@ def test_docstring_parity_spot_checks(monaco_features):
     assert wkt("way/990848785").startswith("POLYGON ((7.4142551 43.7339622, 7.4143113 43.7340201")
 
 
+@needs_reference(MONACO)
 def test_filtered_exploded(spark):
     df = convert_pbf_to_dataframe(
         spark, MONACO, tags_filter={"building": True, "amenity": True, "highway": True}
@@ -63,6 +67,7 @@ def test_filtered_exploded(spark):
     assert one["amenity"] == "bench" and one["building"] is None
 
 
+@needs_reference(MONACO)
 def test_grouped_filter(spark):
     df = convert_pbf_to_dataframe(
         spark,
@@ -112,6 +117,7 @@ def test_parquet_write_cache_and_geo_metadata(spark, tmp_path, grid_pbf):
     assert g["type"] in {"Point", "LineString", "Polygon", "MultiPolygon"}
 
 
+@needs_reference(MONACO)
 def test_multifile_dedup(spark):
     single = convert_pbf_to_dataframe(spark, MONACO, tags_filter={"amenity": "cafe"})
     double = convert_pbf_to_dataframe(
@@ -231,6 +237,7 @@ def test_bbox_covering_column_and_windowed_read(spark, tmp_path, grid_pbf):
     }
 
 
+@needs_reference(MONACO)
 def test_str_sort_and_writer_knobs(spark, tmp_path):
     # sort_algorithm="str" + parquet writer tuning (reference signature:
     # compression_level / row_group_size / parquet_version v1|v2)

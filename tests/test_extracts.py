@@ -20,6 +20,7 @@ from quackosm_spark.extracts import (
     get_extract_by_query,
     raster_area,
 )
+from tests.conftest import needs_reference
 
 
 def _sq(x0, y0, x1, y1):
@@ -168,13 +169,17 @@ def test_display_available_extracts_tree(index, capsys):
             assert depths[label] == depths[by_id[e.parent].file_name] + 1
 
 
+REFERENCE_INIT = "/root/reference/quackosm/__init__.py"
+
+
+@needs_reference(REFERENCE_INIT)
 def test_package_exports_reference_public_api():
     """Every name in the reference's quackosm.__all__ exists here too."""
     import re
 
     import quackosm_spark as q
 
-    ref_src = open("/root/reference/quackosm/__init__.py").read()
+    ref_src = open(REFERENCE_INIT).read()
     ref_all = re.findall(
         r'"(\w+)"', re.search(r"__all__\s*=\s*\[(.*?)\]", ref_src, re.S).group(1)
     )

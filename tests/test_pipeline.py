@@ -4,12 +4,20 @@ unit tests (tests/base/test_pbf_file_reader.py)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from quackosm_spark.geometry import wkb
 from quackosm_spark.plans.pipeline import PbfPipelineOptions, build_features
 from quackosm_spark.sources.pbf import ELEMENTS_SCHEMA
+from tests.conftest import REFERENCE_TEST_FILES, needs_reference
+
+D17F = (
+    f"{REFERENCE_TEST_FILES}/"
+    "d17f922ed15e9609013a6b895e1e7af2d49158f03586f2c675d17b760af3452e.osm.pbf"
+)
 
 
 def _features(spark, elements, **kwargs):
@@ -156,36 +164,40 @@ def test_filter_osm_ids(spark, elements):
     assert sorted(feats) == ["node/1", "relation/201", "way/101"]
 
 
+@needs_reference(D17F)
 def test_ids_filter_reference_fixture(spark):
     """The reference's own ids-filter golden (tests/base/
     test_pbf_file_reader.py:368-398) on its hand-crafted fixture file."""
     from quackosm_spark.functions import convert_pbf_to_dataframe
 
-    fixture = (
-        "/root/reference/tests/test_files/"
-        "d17f922ed15e9609013a6b895e1e7af2d49158f03586f2c675d17b760af3452e.osm.pbf"
-    )
     ids = [
         "way/1101364465", "way/1031859267", "node/10187594406", "way/248632173",
         "node/7573557755", "way/183199499", "way/171570637", "way/1113528087",
         "way/1113528092", "way/259888097",
     ]
-    got = convert_pbf_to_dataframe(spark, fixture, filter_osm_ids=ids)
+    got = convert_pbf_to_dataframe(spark, D17F, filter_osm_ids=ids)
     assert got.count() == 10
     empty = convert_pbf_to_dataframe(
-        spark, fixture, filter_osm_ids=["way/0", "node/0", "relation/0"]
+        spark, D17F, filter_osm_ids=["way/0", "node/0", "relation/0"]
     )
     assert empty.count() == 0
 
 
-def test_empty_header_only_pbf(spark):
-    """Header-only PBF (zero OSMData blobs) → empty elements, empty features."""
+def test_empty_header_only_pbf(spark, tmp_path):
+    """Header-only PBF (zero OSMData blobs) → empty elements, empty features.
+
+    Reads the reference's header-only fixture where it exists; elsewhere the
+    in-repo encoder writes the same shape, one OSMHeader blob and no OSMData
+    blob."""
+    from quackosm_spark.sources import pbf_encode
     from quackosm_spark.sources.pbf import read_osm_pbf
 
     fixture = (
-        "/root/reference/tests/test_files/"
+        f"{REFERENCE_TEST_FILES}/"
         "7a0163cb721992d6219d486b3d29517d06aa0db19dd7be049f4f1fabf6146073.osm.pbf"
     )
+    if not os.path.exists(fixture):
+        fixture = pbf_encode.write_pbf(str(tmp_path / "header_only.osm.pbf"), [])
     el = read_osm_pbf(spark, fixture)
     assert el.count() == 0
     assert build_features(spark, el).count() == 0

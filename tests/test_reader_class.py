@@ -3,9 +3,10 @@
 from __future__ import annotations
 
 from quackosm_spark import PbfFileReader
-from tests.conftest import MONACO
+from tests.conftest import MONACO, needs_reference
 
 
+@needs_reference(MONACO)
 def test_reader_holds_filters(spark, tmp_path):
     reader = PbfFileReader(
         spark,

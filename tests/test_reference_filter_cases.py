@@ -4,7 +4,9 @@ keep_all_tags tag reading.
 Cases extracted from tests/base/test_osm_tags_filtering.py (merge algebra
 17-153, tiny hash-named PBF fixtures with the real HEX2VEC / GEOFABRIK_LAYERS
 filters 155-217, keep_all_tags single-feature reads 218-267) into
-``tests/data/reference_filter_cases.json``.
+``tests/data/reference_filter_cases.json``. The PBF fixtures live in the
+reference checkout, not in this repository; each case that reads one skips
+where that file is absent.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ from pathlib import Path
 
 import pytest
 
-from conftest import MONACO
+from conftest import MONACO, needs_reference
 from quackosm_spark.filters.tags import merge_osm_tags_filter
 from quackosm_spark.functions import convert_pbf_to_geodataframe
 
@@ -42,7 +44,10 @@ def test_merge_osm_tags_filter_conflicts_raise(bad):
 
 @pytest.mark.parametrize(
     "case",
-    DATA["pbf_reader"],
+    [
+        pytest.param(c, marks=needs_reference(REF_FILES / c[0]))
+        for c in DATA["pbf_reader"]
+    ],
     ids=lambda c: f"{c[0][:8]}-{'none' if c[1] is None else len(c[1])}keys",
 )
 def test_pbf_reader_tiny_fixtures(spark, case):
@@ -62,6 +67,7 @@ def test_pbf_reader_tiny_fixtures(spark, case):
     DATA["tags_reading"],
     ids=lambda c: f"{c[0]}-keepall={c[2]}",
 )
+@needs_reference(MONACO)
 def test_keep_all_tags_reading(spark, case):
     filter_osm_id, tags_filter, keep_all_tags, expected_tags_keys = case
     gdf = convert_pbf_to_geodataframe(

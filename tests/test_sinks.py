@@ -13,7 +13,7 @@ from quackosm_spark.functions import (
     convert_pbf_to_duckdb,
     convert_pbf_to_geodataframe,
 )
-from tests.conftest import MONACO
+from tests.conftest import MONACO, needs_reference
 
 MONACO_BBOX = {
     "type": "Polygon",
@@ -21,6 +21,7 @@ MONACO_BBOX = {
 }
 
 
+@needs_reference(MONACO)
 def test_duckdb_sink(spark, tmp_path):
     db = convert_pbf_to_duckdb(
         spark,
@@ -37,6 +38,7 @@ def test_duckdb_sink(spark, tmp_path):
     assert "feature_id" in cols and "geometry" in cols
 
 
+@needs_reference(MONACO)
 def test_geodataframe_sink(spark):
     pdf = convert_pbf_to_geodataframe(spark, MONACO, tags_filter={"amenity": "cafe"})
     assert pdf.index.name == "feature_id"
@@ -46,6 +48,7 @@ def test_geodataframe_sink(spark):
     assert isinstance(geom, dict) and geom["type"] == "Point"
 
 
+@needs_reference(MONACO)
 def test_geometry_driven_conversion(spark, tmp_path):
     """C13 extract selection feeding the conversion pipeline: a local index
     whose 'monaco' extract resolves to the fixture file."""
@@ -76,6 +79,7 @@ def test_geometry_driven_conversion(spark, tmp_path):
     assert 0 < df.count()
 
 
+@needs_reference(MONACO)
 def test_named_extract_conversion(spark, tmp_path):
     from quackosm_spark.functions import convert_osm_extract_to_parquet
 
@@ -136,6 +140,7 @@ def _monaco_index(tmp_path):
     )
 
 
+@needs_reference(MONACO)
 def test_geometry_to_geodataframe_and_duckdb(spark, tmp_path):
     from quackosm_spark.functions import (
         convert_geometry_to_duckdb,
@@ -163,6 +168,7 @@ def test_geometry_to_geodataframe_and_duckdb(spark, tmp_path):
         assert con.sql("SELECT count(*) FROM quackosm").fetchone()[0] == len(gdf)
 
 
+@needs_reference(MONACO)
 def test_osm_extract_to_geodataframe_and_duckdb(spark, tmp_path):
     from quackosm_spark.functions import (
         convert_osm_extract_to_duckdb,
@@ -186,6 +192,7 @@ def test_osm_extract_to_geodataframe_and_duckdb(spark, tmp_path):
         assert con.sql("SELECT count(*) FROM quackosm").fetchone()[0] == 23
 
 
+@needs_reference(MONACO)
 def test_reader_facade_geometry_methods(spark, tmp_path):
     from quackosm_spark.pbf_file_reader import PbfFileReader
 
