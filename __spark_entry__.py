@@ -1756,9 +1756,9 @@ def q95_relation_inner_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q96_relation_shared_edge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared-boundary relation assembly (planar-overlay union — the
-    degenerate adjacency outside Greiner–Hormann's transversal contract;
-    GEOS ST_Union merges polygons that share an edge run): per event
+    """Shared-boundary relation assembly (planar-overlay union of a
+    degenerate adjacency; GEOS ST_Union merges polygons that share an
+    edge run): per event
     scale s, two s×s outer squares sharing a full vertical edge must
     assemble into ONE Polygon of area 2s² (corner-point-touching squares
     would stay MultiPolygon); plus an edge-biting inner of (s/2)² folded

@@ -152,9 +152,7 @@ def points_in_ring(xs: np.ndarray, ys: np.ndarray, ring: np.ndarray) -> np.ndarr
     crossings = cond & (px < xint)
     inside = crossings.sum(axis=1) % 2 == 1
     # boundary tolerance: treat points exactly on a vertex as inside
-    on_vertex = np.zeros_like(inside)
-    for vx, vy in ring:
-        on_vertex |= (xs == vx) & (ys == vy)
+    on_vertex = ((px == rx[None, :]) & (py == ry[None, :])).any(axis=1)
     return inside | on_vertex
 
 

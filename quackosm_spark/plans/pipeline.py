@@ -143,8 +143,9 @@ def build_features(
 ) -> DataFrame:
     """elements (SURVEY §1.1 schema) → features (feature_id, tags, geometry WKB).
 
-    Output shaping (compact/exploded/grouped) is applied by ``shape_output``;
-    this function always returns the compact map form.
+    Output shaping (compact/exploded/grouped) is applied afterwards by
+    ``functions.convert_pbf_to_dataframe`` with the ``plans.output``
+    helpers; this function always returns the compact map form.
     """
     opts = options or PbfPipelineOptions()
     validate_geometry_filter(opts.geometry_filter)
@@ -457,7 +458,6 @@ def _assemble_relation(pdf: pd.DataFrame) -> pd.DataFrame:
         make_valid_ring,
         needs_ring_repair,
         overlay_difference,
-        ring_difference,
         rings_cross,
         rings_share_boundary,
         union_all_polygons,
@@ -568,18 +568,11 @@ def _assemble_relation(pdf: pd.DataFrame) -> pd.DataFrame:
             try:
                 next_shells: list[list[list[float]]] = []
                 for sh in shells:
-                    if rings_share_boundary(sh, inner):
-                        # any shared-edge contact (with or without extra
-                        # transversal crossings) is outside the Greiner–
-                        # Hormann contract — use the planar overlay
-                        # (GEOS ST_Difference parity)
-                        for p2 in overlay_difference(sh, inner):
-                            next_shells.append([list(pt) for pt in p2[0]])
-                            holes.extend(
-                                [list(pt) for pt in h] for h in p2[1:]
-                            )
-                    else:
-                        next_shells.extend(ring_difference(sh, inner))
+                    # planar overlay, GEOS ST_Difference parity for
+                    # crossing and shared-edge contact alike
+                    for p2 in overlay_difference(sh, inner):
+                        next_shells.append([list(pt) for pt in p2[0]])
+                        holes.extend([list(pt) for pt in h] for h in p2[1:])
                 shells = [list(r) for r in next_shells] or shells
             except Exception:
                 pass

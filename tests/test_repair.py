@@ -31,6 +31,54 @@ def _star(n=5, step=2):
     return pts
 
 
+def _sutherland_hodgman(subject, tri):
+    """``subject`` (open vertex list) clipped by the CCW triangle ``tri``.
+    Exact for a convex clip: the result's signed area is the signed area
+    of subject ∩ tri (degenerate zero-width bridges add nothing)."""
+    out = list(subject)
+    for k in range(3):
+        (x1, y1), (x2, y2) = tri[k], tri[(k + 1) % 3]
+
+        def side(p):
+            return (x2 - x1) * (p[1] - y1) - (y2 - y1) * (p[0] - x1)
+
+        inp, out = out, []
+        for i in range(len(inp)):
+            p, q = inp[i - 1], inp[i]
+            sp, sq = side(p), side(q)
+            if (sp >= 0) != (sq >= 0):
+                t = sp / (sp - sq)
+                out.append([p[0] + t * (q[0] - p[0]), p[1] + t * (q[1] - p[1])])
+            if sq >= 0:
+                out.append(q)
+        if not out:
+            break
+    return out
+
+
+def _fan_clip_overlap(a, b):
+    """|A∩B| for two simple rings, independent of the overlay: B's fan
+    triangles T_k = (b0, b_k, b_k+1) sum, with the sign of each T_k, to
+    B's indicator (times B's orientation), so
+    |A∩B| = sign(B)·sign(A)·Σ sign(T_k)·area(A ∩ T_k), and every A ∩ T_k
+    is an exact Sutherland–Hodgman clip by a convex triangle."""
+    from quackosm_spark.geometry.ops import signed_area
+
+    pa, pb = a[:-1], b[:-1]
+    sign_a = math.copysign(1.0, signed_area(pa))
+    sign_b = math.copysign(1.0, signed_area(pb))
+    total = 0.0
+    for k in range(1, len(pb) - 1):
+        tri = [pb[0], pb[k], pb[k + 1]]
+        st = signed_area(tri)
+        if st == 0:
+            continue
+        piece = _sutherland_hodgman(pa, tri if st > 0 else tri[::-1])
+        if len(piece) >= 3:
+            total += math.copysign(1.0, st) * signed_area(piece)
+    return sign_a * sign_b * total
+
+
 class TestMakeValid:
     def test_simple_ring_unchanged(self):
         polys = R.make_valid_ring(SQUARE)
@@ -532,9 +580,8 @@ class TestOverlayPinchVertices:
     def test_union_all_hole_shrunk_by_shared_boundary_part(self):
         # q88's bar+nshape enclose hole [3,7]×[2,6]; the triangle fills
         # its left half SHARING the hole's left rim — the hole survival
-        # must route through overlay_difference (Greiner–Hormann's
-        # contract excludes the shared run) instead of keeping the full
-        # hole
+        # must node the shared run and shrink the hole instead of keeping
+        # all of it
         bar = [[0, 0], [10, 0], [10, 2], [0, 2], [0, 0]]
         nshape = [[1, 1], [3, 1], [3, 6], [7, 6], [7, 1], [9, 1],
                   [9, 8], [1, 8], [1, 1]]
@@ -555,10 +602,13 @@ class TestOverlayPinchVertices:
 
 
 class TestBooleanInvariants:
-    """Inclusion–exclusion identities over random convex polygon pairs:
-    |A∪B| + |A∩B| = |A| + |B| and |A−B| = |A| − |A∩B|. Convexity keeps
-    crossings transversal almost surely (random floats never produce the
-    collinear-overlap degeneracy outside the contract)."""
+    """Inclusion–exclusion identities over random polygon pairs:
+    |A∪B| + |A∩B| = |A| + |B| and |A−B| = |A| − |A∩B|. The radial
+    generator can emit a self-crossing ring (near-equal angles); the
+    overlay reads every input even-odd, so |A| and |B| are the even-odd
+    areas (``make_valid_area``), which equal ``ring_area`` on a simple
+    ring. The shoelace area of a self-crossing ring is not the area of
+    its region."""
 
     @staticmethod
     def _convex(rng, cx, cy, r):
@@ -585,8 +635,8 @@ class TestBooleanInvariants:
             b = self._convex(rng, float(rng.uniform(-1.5, 1.5)),
                              float(rng.uniform(-1.5, 1.5)),
                              float(rng.uniform(0.5, 2.5)))
-            area_a = R.ring_area(a)
-            area_b = R.ring_area(b)
+            area_a = R.make_valid_area(a)
+            area_b = R.make_valid_area(b)
             union = sum(R.ring_area(r) for r in R.ring_union(a, b))
             inter = sum(R.ring_area(r) for r in R.ring_intersection(a, b))
             diff = sum(
@@ -635,13 +685,13 @@ class TestBooleanInvariants:
                 float(rng.uniform(-0.5, 1.5)),
                 float(rng.uniform(0.8, 2.5)),
             )
-            area_a = R.ring_area(a)
-            area_b = R.ring_area(b)
+            area_a = R.make_valid_area(a)
+            area_b = R.make_valid_area(b)
             try:
                 union = _poly_area(R.polygon_union(a, b))
                 inter = sum(R.ring_area(r) for r in R.ring_intersection(a, b))
             except Exception:
-                continue  # degenerate collinear pair outside the contract
+                continue  # a boundary the overlay could not close
             assert union + inter == pytest.approx(
                 area_a + area_b, rel=1e-9
             ), seed
@@ -650,10 +700,9 @@ class TestBooleanInvariants:
 
 
 class TestOverlayUnion:
-    """r03: planar-overlay union — the robust fallback for the
-    shared/collinear-boundary configurations Greiner–Hormann's
-    transversal contract excludes (GEOS union parity for relations whose
-    outer ways run along a common edge)."""
+    """Planar-overlay union on the shared/collinear-boundary
+    configurations (GEOS union parity for relations whose outer ways run
+    along a common edge) and on transversal pairs."""
 
     def test_shared_full_edge_merges(self):
         t1 = [[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]]
@@ -695,9 +744,9 @@ class TestOverlayUnion:
         assert len(polys) == 1 and len(polys[0]) == 2
         assert _net(polys) == pytest.approx(52.0)
 
-    def test_differential_vs_greiner_hormann(self):
-        """On SIMPLE transversal pairs the overlay must agree with GH
-        exactly (same even-odd semantics, different machinery)."""
+    def test_union_matches_fan_clip_oracle(self):
+        """On SIMPLE transversal pairs the overlay union's area equals
+        |A| + |B| − |A∩B|, with |A∩B| from the exact fan-clip oracle."""
         import numpy as np
 
         from quackosm_spark.geometry.ops import signed_area
@@ -720,12 +769,12 @@ class TestOverlayUnion:
                 float(rng.uniform(0.5, 2.5)),
             )
             # the radial generator can emit self-crossing rings at
-            # near-equal angles — outside both kernels' input contract
+            # near-equal angles — outside the oracle's input contract
             if R.has_self_intersection(a) or R.has_self_intersection(b):
                 continue
-            gh = _net(R.polygon_union(a, b))
+            want = R.ring_area(a) + R.ring_area(b) - _fan_clip_overlap(a, b)
             ov = _net(R.overlay_union(a, b))
-            assert ov == pytest.approx(gh, rel=1e-9), seed
+            assert ov == pytest.approx(want, rel=1e-9), seed
             checked += 1
         assert checked >= 30
 
@@ -772,7 +821,10 @@ class TestOverlayDifference:
         assert len(polys) == 1 and len(polys[0]) == 1  # bay, not hole
         assert self._net(polys) == pytest.approx(12.0)
 
-    def test_transversal_matches_gh(self):
+    def test_transversal_matches_fan_clip_oracle(self):
+        """On SIMPLE pairs whose boundaries meet, the overlay difference's
+        area equals |A| − |A∩B|, with |A∩B| from the exact fan-clip
+        oracle."""
         import numpy as np
 
         checked = 0
@@ -789,16 +841,16 @@ class TestOverlayDifference:
                 continue
             if not R.rings_cross(a, b) and not R.rings_share_boundary(a, b):
                 continue  # disconnected boundaries: caller's nested path
-            gh = self._net(R.polygon_difference(a, b))
+            want = R.ring_area(a) - _fan_clip_overlap(a, b)
             ov = self._net(R.overlay_difference(a, b))
-            assert ov == pytest.approx(gh, rel=1e-9, abs=1e-12), seed
+            assert ov == pytest.approx(want, rel=1e-9, abs=1e-12), seed
             checked += 1
         assert checked >= 20
 
 
 class TestRelationSharedBoundary:
     """r03: relation members meeting along shared edge runs assemble with
-    GEOS-union/difference parity (outside GH's transversal contract)."""
+    GEOS-union/difference parity."""
 
     @staticmethod
     def _run(members):
@@ -855,8 +907,8 @@ class TestRelationSharedBoundary:
 
 class TestMixedSharedAndCrossing:
     """r03: a pair that BOTH shares an edge run AND crosses transversally
-    routes through the overlay (GH would mis-handle the collinear part).
-    Oracle: Monte-Carlo even-odd estimate of the union region."""
+    nodes both kinds of contact in one overlay. Oracle: Monte-Carlo
+    even-odd estimate of the union region."""
 
     def test_l_shape_with_crossing_sharer(self):
         import numpy as np
@@ -1005,3 +1057,92 @@ def test_relation_assembly_ignores_member_order():
     for order in ([4, 3, 2, 1, 0], [1, 0, 4, 2, 3], [3, 1, 4, 0, 2]):
         got = _assemble_relation(pd.DataFrame([rows[i] for i in order]))
         assert got["geometry"].iloc[0] == want
+
+
+def _node_all_pairs(segs):
+    """Reference noding: the exact test on EVERY pair i < j, with no
+    bounding-box prefilter — what ``R._node_segments`` must equal."""
+    n = len(segs)
+    splits = {}
+
+    def _add(idx, t, pt):
+        if R._EPS < t < 1 - R._EPS:
+            splits.setdefault(idx, []).append((t, pt))
+
+    for i in range(n):
+        a1, a2 = segs[i]
+        for j in range(i + 1, n):
+            b1, b2 = segs[j]
+            co = R._collinear_overlap_params(a1, a2, b1, b2)
+            if co is not None:
+                _add(i, co[0], list(b1))
+                _add(i, co[1], list(b2))
+                ro = R._collinear_overlap_params(b1, b2, a1, a2)
+                if ro is not None:
+                    _add(j, ro[0], list(a1))
+                    _add(j, ro[1], list(a2))
+                continue
+            hit = R._seg_intersection(a1, a2, b1, b2)
+            if hit is not None:
+                _add(i, hit[0], hit[2])
+                _add(j, hit[1], hit[2])
+    out = []
+    for i, (p1, p2) in enumerate(segs):
+        chain = [p1] + [pt for _t, pt in sorted(splits.get(i, []),
+                                                 key=lambda s: s[0])] + [p2]
+        for k in range(len(chain) - 1):
+            if R._key(chain[k]) != R._key(chain[k + 1]):
+                out.append((chain[k], chain[k + 1]))
+    return out
+
+
+class TestNodeSegmentsCandidatePairs:
+    """The fast path of ``_node_segments`` (the exact test only on
+    bounding-box candidate pairs) must node exactly like the exact test
+    on all pairs."""
+
+    @staticmethod
+    def _soups():
+        rng = np.random.default_rng(5)
+        for _ in range(30):
+            # random floats: transversal crossings, no collinear contact
+            n = int(rng.integers(2, 40))
+            pts = rng.uniform(-1, 1, size=(n, 2, 2)).tolist()
+            yield [(p, q) for p, q in pts]
+        for _ in range(60):
+            # grid-snapped: collinear overlaps, T-touches, retraced and
+            # repeated segments, zero-length segments
+            n = int(rng.integers(2, 40))
+            pts = rng.integers(0, 5, size=(n, 2, 2)).astype(float).tolist()
+            yield [(p, q) for p, q in pts]
+        for _ in range(20):
+            # ring walks, as make_valid_ring nodes them (adjacent edges
+            # share their vertex objects)
+            n = int(rng.integers(3, 60))
+            ring = rng.integers(0, 6, size=(n, 2)).astype(float).tolist()
+            pts = R._open(R.remove_repeated_points(ring + [ring[0]]))
+            yield R._ring_segments(pts)
+        for _ in range(20):
+            # near-collinear: endpoints off one line by ~1e-11, inside the
+            # collinear tolerance but outside each other's exact boxes
+            n = int(rng.integers(2, 20))
+            xs = rng.integers(0, 5, size=(n, 2)).astype(float)
+            ys = rng.choice([0.0, 1e-11, -1e-11], size=(n, 2))
+            yield [
+                ([x1, y1], [x2, y2])
+                for (x1, x2), (y1, y2) in zip(xs.tolist(), ys.tolist())
+            ]
+        for _ in range(10):
+            # far-apart coordinates with a tiny feature: the box tolerance
+            # scales with the soup's extent
+            base = rng.uniform(-1, 1, size=(20, 2, 2)) * 1e-6 + 1e3
+            yield [(p, q) for p, q in base.tolist()]
+        yield []
+        yield [([0.0, 0.0], [1.0, 1.0])]
+
+    def test_matches_all_pairs_noding(self):
+        checked = 0
+        for segs in self._soups():
+            assert R._node_segments(segs) == _node_all_pairs(segs)
+            checked += 1
+        assert checked == 142

@@ -133,8 +133,8 @@ class TestBooleanOpsDifferential:
 
 
 class TestOverlayDifferential:
-    """r03 overlay kernels vs GEOS — including the degenerate
-    shared-boundary configurations GH cannot handle."""
+    """The overlay kernels vs GEOS on the degenerate configurations:
+    shared full and partial edges, corner touches, edge bites, pinches."""
 
     def test_shared_edge_fixtures(self):
         cases = [
